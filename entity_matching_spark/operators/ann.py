@@ -292,17 +292,7 @@ def kmeans_centroids(
     so the plan does not deepen with ``n_iter`` — same discipline as the
     connected-components loop (operators/cluster.py).
     """
-    if init == "kpp":
-        cents = kmeans_parallel_init(vectors, k, id_col=id_col, emb_col=emb_col)
-    elif init == "first":
-        cents = (
-            vectors.orderBy(id_col).limit(k)
-            .select(
-                (F.row_number().over(Window.orderBy(id_col)) - 1).alias("centroid_id"),
-                _emb(emb_col).alias("cemb"),
-            )
-        )
-    else:
+    if init not in ("first", "kpp"):
         raise ValueError(f"kmeans_centroids: unknown init {init!r} (first|kpp)")
     # dims probe over ALL non-NULL embeddings, not one arbitrary row: a
     # sampled empty/short array would set n_dims to 0 (every centroid
@@ -314,7 +304,9 @@ def kmeans_centroids(
     # a [2.0, NULL] member would silently bias (or NULL out) that
     # dimension's trained mean.
     # One aggregate scan against n_iter training scans; whole-row NULL
-    # embeddings stay tolerated (the update path filters them).
+    # embeddings stay tolerated (the update path filters them). It runs
+    # BEFORE seeding: kmeans_parallel_init executes Spark actions over the
+    # vectors, which invalid input must not pay for.
     probe = (
         vectors.where(F.col(emb_col).isNotNull())
         .agg(
@@ -348,6 +340,16 @@ def kmeans_centroids(
         )
     else:
         n_dims = probe["dmin"]
+    if init == "kpp":
+        cents = kmeans_parallel_init(vectors, k, id_col=id_col, emb_col=emb_col)
+    else:
+        cents = (
+            vectors.orderBy(id_col).limit(k)
+            .select(
+                (F.row_number().over(Window.orderBy(id_col)) - 1).alias("centroid_id"),
+                _emb(emb_col).alias("cemb"),
+            )
+        )
     for _ in range(n_iter):
         assign = assign_cells(
             vectors.select(F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding")),

@@ -76,40 +76,10 @@ def run_pipeline(
 ) -> PipelineResult:
     cfg = config or DEFAULT_CONFIG
     ck = StageCheckpointer(
-        work_dir, run_id=cfg.params_hash(), audit_lineage=audit_lineage
+        work_dir, run_id=cfg.params_hash(), audit_lineage=audit_lineage,
+        resume=resume, input_fingerprint=input_fingerprint,
     )
-    h = cfg.params_hash()
-    # per-stage output fingerprints; each stage's upstream_hash chains them so
-    # a changed upstream output invalidates every downstream checkpoint
-    fps: dict[str, str] = {"input": input_fingerprint}
-
-    def _fingerprint(manifest: dict) -> str:
-        payload = json.dumps(
-            {
-                "params": manifest.get("params_hash"),
-                "rows": manifest.get("output_rows"),
-                "schema": manifest.get("schema"),
-                # content digest (sum of per-row xxhash64, checkpoint.py):
-                # a same-cardinality same-schema recompute with different
-                # values still changes the fingerprint
-                "content": manifest.get("content_hash"),
-            },
-            sort_keys=True,
-        ).encode()
-        return hashlib.sha256(payload).hexdigest()[:12]
-
-    def _upstream(upstreams: list[str]) -> str:
-        return "+".join(f"{u}:{fps[u]}" for u in upstreams)
-
-    def stage(name: str, upstreams: list[str], build):
-        up = _upstream(upstreams)
-        if not (resume and ck.is_complete(name, h, up)):
-            ck.write(name, build(), h, up)
-        df = ck.read(spark, name)
-        fps[name] = _fingerprint(ck.manifest(name))
-        return df
-
-    records = stage("s1_records", ["input"], lambda: build_records(transcripts, cfg))
+    records = ck.stage("s1_records", ["input"], lambda: build_records(transcripts, cfg))
 
     # L3 analog (orchestrator per-doc error isolation, EntityMatchingOrchestrator
     # .java:140-145): extraction is null-safe so nothing throws; records with NO
@@ -121,8 +91,10 @@ def run_pipeline(
     for c in signal_cols:
         cond = F.col(c).isNull()
         no_signal = cond if no_signal is None else (no_signal & cond)
-    quarantine = stage("s1_quarantine", ["s1_records"], lambda: records.where(no_signal))
+    quarantine = ck.stage("s1_quarantine", ["s1_records"], lambda: records.where(no_signal))
     records = records.where(~no_signal)
+
+    side: dict[str, DataFrame] = {}
 
     def build_pairs():
         # This stage materializes THREE outputs (s2_dropped_keys,
@@ -134,7 +106,7 @@ def run_pipeline(
         keys = generate_blocking_keys(records, cfg).localCheckpoint()
         pairs, dropped = generate_pairs(keys, cfg)
         # dropped hot keys are surfaced, never silently discarded
-        ck.write("s2_dropped_keys", dropped, h, _upstream(["s1_records"]))
+        side["s2_dropped_keys"] = ck.stage("s2_dropped_keys", ["s1_records"], lambda: dropped)
         # per-record fuzzy fan-out cap (LIMIT-100 analog, symmetric form);
         # dropped candidate pairs are surfaced like the hot keys above
         if cfg.cap_fuzzy_self_linkage:
@@ -143,11 +115,13 @@ def run_pipeline(
             )
         else:
             dropped_cands = pairs.limit(0)
-        ck.write("s3_dropped_candidates", dropped_cands, h, _upstream(["s1_records"]))
+        side["s3_dropped_candidates"] = ck.stage(
+            "s3_dropped_candidates", ["s1_records"], lambda: dropped_cands
+        )
         return pairs
 
-    pairs = stage("s3_pairs", ["s1_records"], build_pairs)
-    scored = stage(
+    pairs = ck.stage("s3_pairs", ["s1_records"], build_pairs)
+    scored = ck.stage(
         "s4_scored", ["s1_records", "s3_pairs"],
         lambda: score_pairs(records, pairs, cfg).select(*SCORED_COLS),
     )
@@ -166,17 +140,20 @@ def run_pipeline(
         return connected_components(edges, cfg)
 
     # s3_pairs is an explicit upstream: the duplicate-edge union reads it
-    components = stage("s6_components", ["s3_pairs", "s4_scored"], build_components)
-    clusters = stage(
+    components = ck.stage("s6_components", ["s3_pairs", "s4_scored"], build_components)
+    clusters = ck.stage(
         "s7_clusters", ["s1_records", "s6_components"],
         lambda: assign_clusters(records.select("conv_id"), components),
     )
 
-    dropped = ck.read(spark, "s2_dropped_keys")
-    dropped_cands = ck.read(spark, "s3_dropped_candidates")
+    # a resumed s3_pairs skips build_pairs: read its side stages back here
+    for name in ("s2_dropped_keys", "s3_dropped_candidates"):
+        if name not in side:
+            side[name] = ck.read(spark, name)
     return PipelineResult(
         records=records, pairs=pairs, scored=scored, components=components,
-        clusters=clusters, dropped_keys=dropped, dropped_candidates=dropped_cands,
+        clusters=clusters, dropped_keys=side["s2_dropped_keys"],
+        dropped_candidates=side["s3_dropped_candidates"],
         quarantine=quarantine, metrics=ck.metrics(),
     )
 
@@ -224,9 +201,6 @@ def run_profile(
     from .checkpoint import _row_hash
 
     cfg = config or DEFAULT_CONFIG
-    ck = StageCheckpointer(
-        work_dir, run_id=cfg.params_hash(), audit_lineage=audit_lineage
-    )
     # the benchmark table joins the hash by CONTENT (row count + order-free
     # xxhash64 sum), not by presence: with resume=True a changed benchmark
     # must invalidate p3_curation/p4_packing, not silently reuse them.
@@ -254,28 +228,10 @@ def run_profile(
             sort_keys=True,
         ).encode()
     ).hexdigest()[:12]
-    fps: dict[str, str] = {"input": input_fingerprint}
-
-    def _fingerprint(manifest: dict) -> str:
-        payload = json.dumps(
-            {
-                "params": manifest.get("params_hash"),
-                "rows": manifest.get("output_rows"),
-                "schema": manifest.get("schema"),
-                "content": manifest.get("content_hash"),
-            },
-            sort_keys=True,
-        ).encode()
-        return hashlib.sha256(payload).hexdigest()[:12]
-
-    def stage(name: str, upstreams: list[str], build):
-        up = "+".join(f"{u}:{fps[u]}" for u in upstreams)
-        if not (resume and ck.is_complete(name, h, up)):
-            ck.write(name, build(), h, up)
-        df = ck.read(spark, name)
-        fps[name] = _fingerprint(ck.manifest(name))
-        return df
-
+    ck = StageCheckpointer(
+        work_dir, run_id=h, audit_lineage=audit_lineage,
+        resume=resume, input_fingerprint=input_fingerprint,
+    )
     def build_docs():
         turns = F.array_sort(F.collect_list(F.struct("turn_idx", "text")))
         return (
@@ -287,8 +243,8 @@ def run_profile(
             )
         )
 
-    docs = stage("p1_documents", ["input"], build_docs)
-    vocab = stage("p2_vocab", ["p1_documents"], lambda: vocab_topk(docs, k=vocab_k))
+    docs = ck.stage("p1_documents", ["input"], build_docs)
+    vocab = ck.stage("p2_vocab", ["p1_documents"], lambda: vocab_topk(docs, k=vocab_k))
 
     def build_curation():
         bench = benchmark if benchmark is not None else docs.limit(0)
@@ -297,7 +253,7 @@ def run_profile(
             docs, bench, near, sample_rates or {}, default_rate=default_rate
         )
 
-    curation = stage("p3_curation", ["p1_documents"], build_curation)
+    curation = ck.stage("p3_curation", ["p1_documents"], build_curation)
 
     def build_packing():
         from ..operators.curate import pack_documents
@@ -308,7 +264,7 @@ def run_profile(
         return pack_documents(kept, chunk_tokens=pack_chunk_tokens,
                               n_shards=pack_shards)
 
-    packing = stage("p4_packing", ["p1_documents", "p3_curation"], build_packing)
+    packing = ck.stage("p4_packing", ["p1_documents", "p3_curation"], build_packing)
     profile_stages = {"p1_documents", "p2_vocab", "p3_curation", "p4_packing"}
     return {
         "documents": docs,

@@ -34,9 +34,15 @@ so the same code serves both backfill and tail-following.
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, MatchConfig
+from ..plans.checkpoint import _fs, _fs_exists, _fs_read_text, _fs_write_text_atomic
+
+log = logging.getLogger(__name__)
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -175,72 +181,6 @@ def stateful_assembly(
     return writer.start()
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Probe a path through Spark's Hadoop filesystem layer.
-
-    A driver-local ``os.path.exists`` is always False for non-local work
-    dirs (s3://, hdfs://), which would silently skip batch-vs-corpus
-    matching forever — wrong results with no error. The Hadoop FS resolves
-    whatever scheme the path carries.
-    """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _fs_write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Single-file text write through the Hadoop FS (scheme-agnostic).
-    NOT atomic on its own — a crash mid-write leaves a zero/partial file.
-    Pointer files that readers follow go through ``_fs_write_text_atomic``.
-    """
-    fs, hpath, _ = _fs(spark, path)
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _fs_write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
-    """Crash-safe single-file replace: write ``<path>.tmp`` fully, then
-    rename over the target (rename IS the atomic primitive on HDFS/posix).
-    Where the FS refuses rename-onto-existing (HDFS ``FileSystem.rename``
-    returns false if the destination exists), delete-then-rename is used;
-    that leaves a brief missing-pointer window but NEVER a partial file —
-    and ``_compaction_manifest`` recovers a missing/corrupt pointer from the
-    per-directory ``_COMPACTION.json`` copies, so both failure modes heal.
-    """
-    fs, hpath, jvm = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-    if not fs.rename(tmp, hpath):
-        fs.delete(hpath, False)
-        if not fs.rename(tmp, hpath):
-            raise IOError(f"atomic rename failed for {path}")
-
-
-def _fs_read_text(spark: SparkSession, path: str) -> str:
-    fs, hpath, jvm = _fs(spark, path)
-    stream = fs.open(hpath)
-    try:
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, jvm.java.nio.charset.StandardCharsets.UTF_8
-        )
-    finally:
-        stream.close()
-
-
 # incremental_match corpus tables that get hash-bucketed on compaction:
 # table -> the column its per-batch reads probe on (keys join on `key`;
 # records are semi-joined by participant `conv_id`)
@@ -309,12 +249,16 @@ def _compaction_manifest(spark: SparkSession, comp_base: str) -> dict | None:
             continue
         try:
             man = json.loads(_fs_read_text(spark, inner))
-        except Exception:
-            # same breadth as the pointer read above: the inner copies are
-            # written non-atomically too, so a compactor crash can leave a
-            # torn/checksum-corrupt copy that surfaces as a Py4J-wrapped
-            # IOException, not ValueError — skip it and recover from an
-            # older generation (or hit the fail-loud floor below)
+        except Exception as e:
+            # same breadth as the pointer read above: a checksum-corrupt or
+            # torn copy (storage fault, or a pre-atomic release's writer)
+            # surfaces as a Py4J-wrapped IOException, not ValueError — skip
+            # it and recover from an older generation (or hit the fail-loud
+            # floor below), but say so: a fall-back caused by an
+            # infrastructure fault must be visible
+            cause = (e.java_exception.getClass().getName()
+                     if isinstance(e, Py4JJavaError) else type(e).__name__)
+            log.warning("compaction recovery: skipping unreadable %s (%s)", inner, cause)
             continue
         if best is None or man["h"] > best["h"]:
             best = man
@@ -489,7 +433,7 @@ def compact_corpus(
         # (1) inner copy inside the completed directory — the recovery
         # anchor; (2) atomic pointer cutover readers follow
         _assert_stream_quiesced(spark, work_dir, expected_offsets=offs0)
-        _fs_write_text(spark, f"{out_dir}/_COMPACTION.json", json.dumps(manifest))
+        _fs_write_text_atomic(spark, f"{out_dir}/_COMPACTION.json", json.dumps(manifest))
         _fs_write_text_atomic(spark, f"{comp_base}/MANIFEST.json", json.dumps(manifest))
         stats[table] = {"h": int(new_high),
                         "rows": spark.read.parquet(out_dir).count()}

@@ -197,8 +197,11 @@ class TestKMeansParallelInit:
         ragged = spark.createDataFrame(
             [(0, [1.0, 2.0]), (1, [])], "vec_id int, embedding array<double>"
         )
-        with _pytest.raises(ValueError, match="ragged"):
-            kmeans_centroids(ragged, k=1, n_iter=1)
+        # the probe runs before seeding, so the k-means|| init (which runs
+        # Spark actions of its own) fails the same way
+        for init in ("first", "kpp"):
+            with _pytest.raises(ValueError, match="ragged"):
+                kmeans_centroids(ragged, k=1, n_iter=1, init=init)
         empty = spark.createDataFrame(
             [(0, []), (1, [])], "vec_id int, embedding array<double>"
         )

@@ -85,6 +85,35 @@ class TestCheckpointer:
             # non-partitioned '' values are data, not directory names — fine
             assert ck.write("s_flat", df, params_hash="h")["output_rows"] == 20
 
+    def test_crash_mid_overwrite_invalidates_manifest(self, spark, tmp_path):
+        """Run A commits stage s; run B overwrites s and fails after the
+        overwrite (here: the '' partition guard). A later run with A's
+        params must not resume from the files B clobbered."""
+        ck = StageCheckpointer(str(tmp_path), run_id="t")
+        ck.write("s", spark.range(10).selectExpr("id AS x", "'a' AS part"),
+                 params_hash="h1", partition_by=["part"])
+        assert ck.is_complete("s", "h1")
+        with pytest.raises(RuntimeError, match="empty-string"):
+            ck.write("s", spark.range(10).selectExpr("id AS x", "'' AS part"),
+                     params_hash="h2", partition_by=["part"])
+        assert not ck.is_complete("s", "h1")
+        assert ck.manifest("s") is None
+
+    def test_file_uri_work_dir(self, spark, tmp_path, monkeypatch):
+        """A file:// work dir lands manifests in that directory, not in a
+        relative ./file: tree under the driver's working directory."""
+        cwd = tmp_path / "cwd"
+        cwd.mkdir()
+        monkeypatch.chdir(cwd)
+        work = tmp_path / "work"
+        ck = StageCheckpointer("file://" + str(work), run_id="t")
+        m = ck.write("s_uri", spark.range(5), params_hash="h")
+        assert (work / "s_uri_manifest.json").exists()
+        assert m["files"] and all(f["bytes"] > 0 for f in m["files"])
+        assert ck.is_complete("s_uri", "h")
+        assert [x["stage"] for x in ck.metrics()] == ["s_uri"]
+        assert not os.path.exists(cwd / "file:")
+
     def test_manifest_on_disk(self, spark, tmp_path):
         ck = StageCheckpointer(str(tmp_path), run_id="t")
         ck.write("s_x", spark.range(5), params_hash="h")
@@ -169,6 +198,9 @@ class TestPipelineRound2:
         m["output_rows"] += 1
         with open(s1_manifest, "w") as f:
             json.dump(m, f)
+        # the hand edit bypasses Hadoop's checksummed writer: drop the stale
+        # .crc sidecar so the next read does not raise ChecksumException
+        os.remove(os.path.join(wd, ".s1_records_manifest.json.crc"))
 
         t3 = os.path.getmtime(s3_manifest)
         run_pipeline(spark, small_transcripts, wd, MatchConfig())

@@ -681,7 +681,7 @@ class TestCompactionSafety:
         assert _compaction_manifest(spark, wd + "/keys_compacted") == good
         assert _read_corpus_table(spark, wd, "keys", exclude_batch=-1).count() == n
 
-    def test_torn_pointer_without_inner_copy_fails_loud(self, spark, tmp_path):
+    def test_torn_pointer_without_inner_copy_fails_loud(self, spark, tmp_path, caplog):
         """A torn MANIFEST.json whose h=* directories carry NO recoverable
         _COMPACTION.json (e.g. written by a pre-atomic release) proves a
         cutover was attempted — raw partitions may already be pruned — so
@@ -712,6 +712,9 @@ class TestCompactionSafety:
                 f.write("X")  # flip the first byte; .crc now stale
         with pytest.raises(IOError, match="never-compacted"):
             _compaction_manifest(spark, base)
+        # the skipped copy is logged with its path and the exception class
+        skipped = [r.getMessage() for r in caplog.records if r.levelname == "WARNING"]
+        assert any("_COMPACTION.json" in m and "ChecksumException" in m for m in skipped), skipped
         for inner in glob.glob(base + "/h=*/_COMPACTION.json"):
             os.remove(inner)  # old-format directory: no recovery anchor
         with pytest.raises(IOError, match="never-compacted"):
