@@ -1,14 +1,16 @@
-"""Pipeline configuration, including reference-fidelity quirk flags.
+"""Pipeline configuration, including the one reference-fidelity quirk flag.
 
 The reference implementation has several semantic quirks that a faithful
-re-implementation must decide on explicitly (see SURVEY.md §4.4). Each is a
-flag here, with the default replicating the reference behavior bit-for-bit
-except where SURVEY.md documents the intended-semantics choice.
+re-implementation must decide on explicitly (see SURVEY.md §4.4). Q1 is a
+flag here, with the default replicating the reference arithmetic; the others
+(Q2 true Jaro-Winkler similarity, Q3 the lost Debt-Domain boost, Q5/Q6
+line-preserving document normalization) are fixed choices, documented at the
+sites that apply them (operators/score.py, functions/normalize.build_udfs).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, asdict
 import hashlib
 import json
 
@@ -17,7 +19,7 @@ import json
 class MatchConfig:
     """All tunables for the record-linkage pipeline.
 
-    Quirk flags (reference citations into /root/reference):
+    Quirk flag (citations into the reference's Java sources):
 
     - ``penalty_inverted`` (Q1): DiscrepancySeverity penalties are NEGATIVE
       constants (CRITICAL=-25 .. LOW=-5, entity/DiscrepancySeverity.java:7-10)
@@ -25,49 +27,15 @@ class MatchConfig:
       (engine/ConfidenceScorer.java:44-46,130-139) — so each discrepancy
       *raises* the reference's final score. Default True replicates that
       arithmetic; False applies the documented intent (penalties reduce score).
-
-    - ``jw_commons_distance_mode`` (Q2): commons-text >=1.8
-      JaroWinklerDistance.apply returns 1-similarity, but every reference call
-      site treats it as similarity (engine/FuzzyNameMatcher.java:92,113,127).
-      Default False computes true JW similarity (the documented intent per
-      system-requirements.md:193-217); True reproduces the raw library value
-      for differential testing.
-
-    - ``drop_debt_domain_boost`` (Q3): the reference writes the Debt-Domain
-      boost under key "debt domain id_boost" (spaces,
-      engine/IdentifierMatcher.java:137) but the scorer reads
-      "debt_domain_id_boost" (engine/ConfidenceScorer.java:95) — the boost is
-      silently lost. Default True replicates the loss.
-
-    - ``collapse_newlines_in_text`` (Q5, graft addition): the reference's
-      CharacterNormalizer.normalize collapses ALL whitespace including
-      newlines (extraction/CharacterNormalizer.java:65), which makes the
-      line-anchored field patterns ([^\\n]+, MULTILINE ^/$ in
-      extraction/FieldParser.java:45-72) capture to end-of-document. Default
-      False preserves line structure during document-level normalization so
-      field extraction is line-scoped (names *within* a line still get the
-      exact normalization chain); True replicates the reference collapse.
     """
 
-    # --- thresholds (engine/FuzzyNameMatcher.java:18-19, orchestrator:192-212)
-    legal_name_threshold: float = 0.85
-    fund_manager_threshold: float = 0.70
+    # --- thresholds (orchestrator:192-212)
     match_threshold: float = 85.0
     review_threshold: float = 50.0
     fuzzy_keep_threshold: float = 50.0  # MatchingEngine.java:72
 
-    # --- quirk flags (SURVEY.md §4.4)
+    # --- quirk flag (SURVEY.md §4.4)
     penalty_inverted: bool = True
-    jw_commons_distance_mode: bool = False
-    drop_debt_domain_boost: bool = True
-    collapse_newlines_in_text: bool = False
-    # document normalization path. False (default) = Arrow pandas UDF; True =
-    # native JVM regexp chain. Measured on the bench corpus the pandas path is
-    # 2-2.6x FASTER: a pandas UDF under when() is evaluated for every row
-    # (ArrowEvalPython is unconditional), so the native chain pays the
-    # transliteration UDF AND ~12 java.util.regex passes over full documents.
-    # Outputs are test-pinned equal either way (test_assemble.py).
-    native_doc_normalization: bool = False
     # A5: treat the input text as OCR-derived — the per-record OCR-confidence
     # estimate (operators/assemble.ocr_confidence) then multiplies into
     # extraction_confidence (MultiFormatDocumentExtractor.java:30-62).
@@ -75,10 +43,6 @@ class MatchConfig:
     # exactly the reference's non-OCR path); the ocr_confidence column is
     # emitted either way.
     ocr_text_mode: bool = False
-    # keep the normalized document text columns in the S1 records output
-    # (debugging aid). Off by default: the text dominates row size and is
-    # dead weight in every downstream shuffle once extraction has run.
-    keep_normalized_text: bool = False
 
     # --- blocking / skew control (SURVEY.md §4.3.1)
     # which blocking passes run (subset of operators/blocking.BLOCKING_PASSES);
@@ -104,9 +68,8 @@ class MatchConfig:
     # 0 disables. Catalog mode applies it per probe (operators/catalog.py);
     # the batch self-linkage path applies the symmetric variant (a pair is
     # kept if within EITHER endpoint's top-n — both endpoints are probes,
-    # operators/blocking.cap_fuzzy_fanout) when cap_fuzzy_self_linkage is on.
+    # operators/blocking.cap_fuzzy_fanout).
     max_candidates_per_probe: int = 100
-    cap_fuzzy_self_linkage: bool = True
 
     def params_hash(self) -> str:
         """Stable hash of the config for checkpoint identity."""

@@ -10,14 +10,14 @@ Reference fidelity notes (citations into /root/reference):
   The Java code strips the control range [\\u0000-\\u001F], which INCLUDES
   ``\\n`` and ``\\t`` — newlines are deleted (lines glued with no separator)
   before the ``\\s+`` collapse. ``preserve_newlines=True`` (the pipeline's
-  document mode, quirk Q5 in config.py) exempts ``\\n`` so field extraction
+  document mode, quirk Q5 in ``build_udfs``) exempts ``\\n`` so field extraction
   stays line-scoped; default False replicates the Java byte-for-byte.
 - D2 ``fix_ocr_errors``           — CharacterNormalizer.java:74-84,109-123.
   ``rn -> m`` is unconditional ("modern" -> "modem"), pinned by
   test/extraction/CharacterNormalizerTest.java:33-39. The punctuation pass
   inserts a space after ``.,;:!?`` before a letter, which breaks email
-  addresses in document text (quirk Q6) — the pipeline therefore applies the
-  punctuation pass to documents only when configured (config.py).
+  addresses in document text (quirk Q6) — the pipeline's document mode
+  (``build_udfs``) therefore skips the punctuation pass.
 - D3 ``normalize_text``           — CharacterNormalizer.java:90-104 (D1 + D2).
 - D5 ``clean_entity_name``        — CharacterNormalizer.java:128-147.
 - D6 ``normalize_name``           — engine/NameNormalizer.java:108-137
@@ -155,7 +155,7 @@ def fix_ocr_errors(
 
     ``punctuation=False`` skips fixOCRPunctuation (java:109-123) — used by the
     document pipeline because the space-after-punctuation rule breaks email
-    addresses (quirk Q6 in config.py).
+    addresses (quirk Q6, see ``build_udfs``).
     """
     out = _apply_chain(_as_str_series(s), _D2_CHAR_FIXES)
     if punctuation:
@@ -268,86 +268,22 @@ def dupdet_normalize_name(s: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# Scalar conveniences (tests / debugging)
-# ---------------------------------------------------------------------------
-
-def _scalar(fn, value, **kw):
-    return fn(pd.Series([value]), **kw).iloc[0]
-
-
-def normalize_text_scalar(value, **kw) -> str:
-    return _scalar(normalize_text, value, **kw)
-
-
-def normalize_name_scalar(value) -> str:
-    return _scalar(normalize_name, value)
-
-
-def normalize_fund_manager_scalar(value) -> str:
-    return _scalar(normalize_fund_manager, value)
-
-
-def clean_entity_name_scalar(value):
-    return _scalar(clean_entity_name, value)
-
-
-def extract_dba_scalar(value):
-    df = extract_dba_components(pd.Series([value]))
-    return df["legal_name"].iloc[0], df["trade_name"].iloc[0]
-
-
-# ---------------------------------------------------------------------------
-# Native (JVM) document-text normalization
-# ---------------------------------------------------------------------------
-# The D1+D2 chains are plain regex replaces — expressible as a native
-# regexp_replace chain that runs inside whole-stage codegen (Spark compiles
-# java.util.regex, the reference's own engine — BETTER pattern fidelity than
-# the pandas twin). Only transliteration needs Python; it is gated behind a
-# non-ASCII rlike so the Arrow round-trip happens for the few rows that need
-# it. Equality with the pandas path over the synthetic corpus is test-pinned
-# (tests/test_assemble.py::test_native_normalization_matches_pandas).
-
-
-def normalize_doc_text_native(col, translit_udf):
-    """Native D3 twin of ``normalize_text(preserve_newlines=True,
-    ocr_punctuation=False)`` — the document pipeline's configuration."""
-    from pyspark.sql import functions as F
-
-    out = F.when(col.rlike("[^\\x00-\\x7F]"), translit_udf(col)).otherwise(col)
-    for pat, repl in _D1_REPLACEMENTS:
-        out = F.regexp_replace(out, pat, repl)
-    out = F.regexp_replace(out, _CONTROL_KEEP_NL_RE, "")
-    out = F.regexp_replace(out, _ZERO_WIDTH_RE, "")
-    out = F.regexp_replace(out, "[^\\S\\n]+", " ")
-    out = F.regexp_replace(out, "\\s*\\n\\s*", "\n")
-    out = F.trim(out)
-    for pat, repl in _D2_CHAR_FIXES:
-        # Java regex replacement uses $1 group references
-        out = F.regexp_replace(out, pat, repl.replace("\\g<1>", "$1").replace("\\1", "$1"))
-    return F.trim(out)
-
-
-# ---------------------------------------------------------------------------
 # Spark pandas-UDF wrappers (built lazily so this module imports without Spark)
 # ---------------------------------------------------------------------------
 
-def build_udfs(config=None):
+def build_udfs():
     """Return a dict of Arrow-batched pandas UDFs over these kernels."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StringType
 
-    from ..config import DEFAULT_CONFIG
-
-    cfg = config or DEFAULT_CONFIG
-    preserve = not cfg.collapse_newlines_in_text
-
     @pandas_udf(StringType())
     def norm_doc_text(s: pd.Series) -> pd.Series:
-        return normalize_text(s, preserve_newlines=preserve, ocr_punctuation=False)
-
-    @pandas_udf(StringType())
-    def translit(s: pd.Series) -> pd.Series:
-        return transliterate(s)
+        # Q5/Q6: keep line structure (the reference's collapse of every
+        # whitespace incl. newlines, extraction/CharacterNormalizer.java:65,
+        # makes the line-anchored patterns of extraction/FieldParser.java:45-72
+        # capture to end-of-document) and skip the OCR punctuation pass (it
+        # breaks email addresses). Names within a line keep the exact chain.
+        return normalize_text(s, preserve_newlines=True, ocr_punctuation=False)
 
     @pandas_udf(StringType())
     def norm_name(s: pd.Series) -> pd.Series:
@@ -366,5 +302,4 @@ def build_udfs(config=None):
         "norm_name": norm_name,
         "norm_fund_manager": norm_fund_manager,
         "clean_name": clean_name,
-        "translit": translit,
     }

@@ -11,8 +11,8 @@ Reference parity:
   since commons-text 1.8 returns 1 - similarity while every call site treats
   it as a similarity (quirk Q2, SURVEY.md §4.4). ``jaro_winkler`` here computes
   TRUE similarity with commons-text's matching rules (boost only when
-  jaro > 0.7, prefix cap 4, scaling 0.1); callers flip it to the raw library
-  value via ``config.jw_commons_distance_mode``.
+  jaro > 0.7, prefix cap 4, scaling 0.1) — the documented intent
+  (system-requirements.md:193-217), not the raw library value.
 - Levenshtein is constructed but never called in the reference
   (FuzzyNameMatcher.java:22,27 — dead code, note N1); shipped because the
   north star lists it, and cross-checked against Spark's native
@@ -140,23 +140,18 @@ def encode_strings(strings):
     return _encode_padded([s if isinstance(s, str) else "" for s in strings])
 
 
-def jaro_winkler_encoded(enc_a, enc_b, commons_distance_mode: bool = False) -> np.ndarray:
+def jaro_winkler_encoded(enc_a, enc_b) -> np.ndarray:
     """Jaro-Winkler on pre-encoded columns, commons-text rules."""
     jaro = jaro_batch_encoded(enc_a, enc_b)
     p = common_prefix_len_encoded(enc_a, enc_b)
-    jw = np.where(jaro > 0.7, jaro + 0.1 * p * (1.0 - jaro), jaro)
-    return 1.0 - jw if commons_distance_mode else jw
+    return np.where(jaro > 0.7, jaro + 0.1 * p * (1.0 - jaro), jaro)
 
 
-def jaro_winkler_batch(a_strings, b_strings, commons_distance_mode: bool = False) -> np.ndarray:
-    """Jaro-Winkler similarity, commons-text rules (boost iff jaro > 0.7).
-
-    ``commons_distance_mode=True`` returns 1 - similarity, the raw value the
-    reference's call sites actually receive (quirk Q2).
-    """
+def jaro_winkler_batch(a_strings, b_strings) -> np.ndarray:
+    """Jaro-Winkler similarity, commons-text rules (boost iff jaro > 0.7)."""
     a = ["" if s is None else s for s in a_strings]
     b = ["" if s is None else s for s in b_strings]
-    return jaro_winkler_encoded(_encode_padded(a), _encode_padded(b), commons_distance_mode)
+    return jaro_winkler_encoded(_encode_padded(a), _encode_padded(b))
 
 
 def levenshtein_batch(a_strings, b_strings) -> np.ndarray:
@@ -208,7 +203,7 @@ def token_jaccard_batch(a_strings, b_strings) -> np.ndarray:
     return out
 
 
-def build_jw_udf(commons_distance_mode: bool = False):
+def build_jw_udf():
     """Arrow-batched pandas UDF over ``jaro_winkler_batch`` (defined here so
     the type hints resolve against this module's globals)."""
     from pyspark.sql.functions import pandas_udf
@@ -216,12 +211,7 @@ def build_jw_udf(commons_distance_mode: bool = False):
 
     @pandas_udf(DoubleType())
     def jw(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            jaro_winkler_batch(
-                a.fillna("").tolist(), b.fillna("").tolist(),
-                commons_distance_mode=commons_distance_mode,
-            )
-        )
+        return pd.Series(jaro_winkler_batch(a.fillna("").tolist(), b.fillna("").tolist()))
 
     return jw
 

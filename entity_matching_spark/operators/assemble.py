@@ -195,7 +195,7 @@ def extract_fields(df: DataFrame, text_col: str, prefix: str = "",
                    config: MatchConfig | None = None) -> DataFrame:
     """C1-C11 over a (normalized) text column, emitting ``{prefix}field`` columns."""
     cfg = config or DEFAULT_CONFIG
-    udfs = build_udfs(cfg)
+    udfs = build_udfs()
     p = prefix
     t = F.col(text_col)
 
@@ -355,17 +355,10 @@ def build_records(transcripts: DataFrame, config: MatchConfig | None = None) -> 
     tax-document extraction, orchestrator stage 2).
     """
     cfg = config or DEFAULT_CONFIG
-    udfs = build_udfs(cfg)
+    udfs = build_udfs()
 
     conv = assemble_conversations(transcripts, cfg)
-    if cfg.native_doc_normalization and not cfg.collapse_newlines_in_text:
-        # native JVM regexp chain; Python only for non-ASCII transliteration
-        from ..functions.normalize import normalize_doc_text_native
-
-        def norm_doc(col):
-            return normalize_doc_text_native(col, udfs["translit"])
-    else:
-        norm_doc = udfs["norm_doc_text"]
+    norm_doc = udfs["norm_doc_text"]
     conv = conv.withColumns({
         "norm_text": norm_doc(F.col("text")),
         "norm_tax_text":
@@ -392,9 +385,5 @@ def build_records(transcripts: DataFrame, config: MatchConfig | None = None) -> 
     })
     # the normalized document text is dead weight once extraction has run —
     # dropping it keeps the S1 checkpoint and every downstream shuffle lean
-    # (the raw text dominates row size); keep_normalized_text re-enables it
-    # for debugging
-    drop = ["turns", "text", "tax_text"]
-    if not cfg.keep_normalized_text:
-        drop += ["norm_text", "norm_tax_text"]
-    return rec.drop(*drop)
+    # (the raw text dominates row size)
+    return rec.drop("turns", "text", "tax_text", "norm_text", "norm_tax_text")

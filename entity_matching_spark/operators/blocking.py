@@ -77,7 +77,7 @@ def generate_blocking_keys(records: DataFrame, config: MatchConfig | None = None
             F.struct(F.lit(pass_name).alias("pass"), _key(pass_name, key_col).alias("key")),
         )
 
-    enabled = set(getattr(cfg, "blocking_passes", BLOCKING_PASSES))
+    enabled = set(cfg.blocking_passes)
     equi_cols = {
         # B1/B2/B4 equi-keys; B3 hyphen-stripped EIN (sql/findByEIN.sql:2)
         "mei": F.col("mei"),
@@ -273,7 +273,7 @@ def cap_candidates_per_probe(pairs: DataFrame, config: MatchConfig | None = None
     independently within its shuffle partition.
     """
     cfg = config or DEFAULT_CONFIG
-    n = getattr(cfg, "max_candidates_per_probe", 0)
+    n = cfg.max_candidates_per_probe
     if not n:
         return pairs
     rank_map = F.create_map(
@@ -293,7 +293,7 @@ def cap_candidates_per_probe(pairs: DataFrame, config: MatchConfig | None = None
 
 
 def cap_fuzzy_fanout(
-    pairs: DataFrame, config: MatchConfig | None = None, eager: bool = False
+    pairs: DataFrame, config: MatchConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Symmetric per-record cap on fuzzy-name candidates for the SELF-LINKAGE
     pair set — the batch-path analog of ``cap_candidates_per_probe``.
@@ -316,15 +316,16 @@ def cap_fuzzy_fanout(
     sort and no unbounded partition: a record's candidate list is already
     bounded by sum-of-its-block-sizes <= n_keys x max_block_size.
 
-    ``eager=True`` materializes the ranked fuzzy subset (localCheckpoint)
-    before the kept/dropped split — callers that WRITE both outputs (the
-    pipeline checkpoints kept as s3_pairs and dropped as
-    s3_dropped_candidates) would otherwise re-execute the entire upstream
-    blocking DAG once per output. The materialization is bounded by the
-    candidate-pair count, which is about to be persisted anyway.
+    The ranked fuzzy subset is materialized (localCheckpoint) before the
+    kept/dropped split — callers WRITE both outputs (the pipeline checkpoints
+    kept as s3_pairs and dropped as s3_dropped_candidates), which would
+    otherwise re-execute the entire upstream blocking DAG once per output.
+    The materialization is bounded by the candidate-pair count, which is
+    about to be persisted anyway. ``max_candidates_per_probe=0`` disables the
+    cap: every pair is kept and the dropped frame is empty.
     """
     cfg = config or DEFAULT_CONFIG
-    n = getattr(cfg, "max_candidates_per_probe", 0)
+    n = cfg.max_candidates_per_probe
     is_fuzzy = F.col("strategy") == "FUZZY_NAME"
     if not n:
         return pairs, pairs.where(is_fuzzy).limit(0)
@@ -343,9 +344,8 @@ def cap_fuzzy_fanout(
             "_ra": F.row_number().over(wa),
             "_rb": F.row_number().over(wb),
         })
+        .localCheckpoint()
     )
-    if eager:
-        ranked = ranked.localCheckpoint()
     keep = (F.col("_ra") <= n) | (F.col("_rb") <= n)
     kept = ranked.where(keep).drop("_ra", "_rb")
     dropped = ranked.where(~keep).drop("_ra", "_rb")
@@ -372,7 +372,7 @@ def generate_pairs(
     """
     cfg = config or DEFAULT_CONFIG
     cap = cfg.max_block_size
-    salt_at = getattr(cfg, "salt_threshold", 32)
+    salt_at = cfg.salt_threshold
     B = max(2, cfg.salt_buckets)
 
     # Group sizes via groupBy + shuffle join. Deliberately NO broadcast hint:

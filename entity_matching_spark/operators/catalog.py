@@ -43,16 +43,15 @@ CATALOG_DDL = (
 )
 
 
-def catalog_to_records(catalog: DataFrame, config: MatchConfig | None = None) -> DataFrame:
+def catalog_to_records(catalog: DataFrame) -> DataFrame:
     """Project catalog rows (main + location) onto the S1 record schema.
 
     Normalized name columns are computed with the same kernels as probe
     records; tax-form columns are null (the catalog has no tax documents).
     """
-    cfg = config or DEFAULT_CONFIG
     from ..functions.normalize import build_udfs
 
-    udfs = build_udfs(cfg)
+    udfs = build_udfs()
 
     rec = catalog.select(
         F.concat(F.lit(CAT_PREFIX), F.col("entity_id").cast("string")).alias("conv_id"),
@@ -115,7 +114,7 @@ def match_records_to_catalog(
     from .blocking import cap_candidates_per_probe, generate_blocking_keys, generate_pairs
     from .score import SIDE_COLS, score_pairs
 
-    cat = catalog_to_records(catalog, cfg)
+    cat = catalog_to_records(catalog)
     keep = list(SIDE_COLS)
     both = records.select(*keep).unionByName(cat.select(*keep))
 

@@ -74,9 +74,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, config: MatchConfig | None = None, checkpoint: bool = True
-) -> DataFrame:
+def connected_components(edges: DataFrame, config: MatchConfig | None = None) -> DataFrame:
     """Edges (conv_id_a, conv_id_b) -> labels (conv_id, cluster_id).
 
     cluster_id is the lexicographically-smallest member of the component.
@@ -84,15 +82,11 @@ def connected_components(
     cluster_id = own conv_id (see ``assign_clusters``).
     """
     cfg = config or DEFAULT_CONFIG
-    e = _canonical(edges)
-    if checkpoint:
-        e = e.localCheckpoint()
+    e = _canonical(edges).localCheckpoint()
 
     n_prev = e.count()
     for _ in range(cfg.cc_max_iterations):
-        e2 = _small_star(_large_star(e))
-        if checkpoint:
-            e2 = e2.localCheckpoint()
+        e2 = _small_star(_large_star(e)).localCheckpoint()
         # convergence: both sides are distinct sets, so equal counts plus an
         # empty one-way difference proves set equality (one anti-join, not two)
         n2 = e2.count()

@@ -23,7 +23,9 @@ Pair orientation: the lexicographically-smaller conv_id plays the reference's
 "extracted" (probe) role, the larger the "LoanIQ candidate" role. The
 orientation is deterministic, so two runs give identical scores.
 
-Semantic quirks Q1/Q2/Q3 are honored per config.py (SURVEY.md §4.4).
+Semantic quirks (SURVEY.md §4.4): Q1 is the ``penalty_inverted`` flag in
+config.py; Q2 (true JW similarity) and Q3 (lost DD boost) are fixed choices
+documented where they are applied below.
 """
 
 from __future__ import annotations
@@ -59,20 +61,19 @@ _JW_FIELDS = [
 ]
 
 
-def _pair_scores_udf(config: MatchConfig):
+def _pair_scores_udf():
     """The single Arrow-batched similarity UDF (see module docstring)."""
     from pyspark.sql.functions import pandas_udf
 
     from ..functions.normalize import normalize_name
-    from ..functions.similarity import encode_strings, jaro_winkler_encoded
-
-    dist_mode = config.jw_commons_distance_mode
+    # Q2: true JW similarity, not the 1 - similarity that commons-text >=1.8
+    # JaroWinklerDistance.apply hands the reference's call sites
+    # (engine/FuzzyNameMatcher.java:92,113,127; intent per
+    # system-requirements.md:193-217).
+    from ..functions.similarity import encode_strings, jaro_winkler_encoded as jw_enc
 
     def enc(s: pd.Series):
         return encode_strings(s.tolist())
-
-    def jw_enc(ea, eb):
-        return jaro_winkler_encoded(ea, eb, commons_distance_mode=dist_mode)
 
     def jw(a: pd.Series, b: pd.Series):
         return jw_enc(enc(a), enc(b))
@@ -305,7 +306,7 @@ def score_pairs(
 
     # --- similarity UDF (one Arrow pass per batch); tier predicates native --
     tiers = _tier_predicates()
-    scores = _pair_scores_udf(cfg)(
+    scores = _pair_scores_udf()(
         "norm_legal_name_a", "norm_legal_name_b",
         "legal_name_a", "legal_name_b",
         "dba_a",
@@ -362,21 +363,15 @@ def score_pairs(
     # (enhanceExistingMatch, IdentifierMatcher.java:128-141)
     lei_boost = F.when(F.col("lei_eq") & F.col("mei_eq"), 20.0).otherwise(0.0)
     ein_boost = F.when(F.col("ein_eq") & (F.col("mei_eq") | F.col("lei_eq")), 15.0).otherwise(0.0)
-    # Q3: the DD boost is written under a malformed key and never read
-    # (SURVEY.md §4.4); drop_debt_domain_boost=True replicates the loss
-    dd_boost_raw = F.when(
-        F.col("dd_eq") & (F.col("mei_eq") | F.col("lei_eq") | F.col("ein_eq")), 10.0
-    ).otherwise(0.0)
-    dd_boost = F.lit(0.0) if cfg.drop_debt_domain_boost else dd_boost_raw
-    identifier_score = id_base + lei_boost + ein_boost + dd_boost
+    # Q3: no DD boost term. The reference writes it under the key
+    # "debt domain id_boost" (engine/IdentifierMatcher.java:137) but the scorer
+    # reads "debt_domain_id_boost" (engine/ConfidenceScorer.java:95), so the
+    # boost is silently lost; replicated (SURVEY.md §4.4).
+    identifier_score = id_base + lei_boost + ein_boost
 
     # identifier count (ConfidenceScorer.java:171-189). Under Q3 a DD *boost*
     # is invisible to the counter too (malformed key) — DD counts only as base
-    dd_counts = F.col("dd_eq") & (
-        ~(F.col("mei_eq") | F.col("lei_eq") | F.col("ein_eq"))
-        if cfg.drop_debt_domain_boost
-        else F.lit(True)
-    )
+    dd_counts = F.col("dd_eq") & ~(F.col("mei_eq") | F.col("lei_eq") | F.col("ein_eq"))
     id_count = (
         F.col("mei_eq").cast("int") + F.col("lei_eq").cast("int")
         + F.col("ein_eq").cast("int") + dd_counts.cast("int")

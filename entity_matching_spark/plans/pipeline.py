@@ -109,12 +109,7 @@ def run_pipeline(
         side["s2_dropped_keys"] = ck.stage("s2_dropped_keys", ["s1_records"], lambda: dropped)
         # per-record fuzzy fan-out cap (LIMIT-100 analog, symmetric form);
         # dropped candidate pairs are surfaced like the hot keys above
-        if cfg.cap_fuzzy_self_linkage:
-            pairs, dropped_cands = cap_fuzzy_fanout(
-                pairs.localCheckpoint(), cfg, eager=True
-            )
-        else:
-            dropped_cands = pairs.limit(0)
+        pairs, dropped_cands = cap_fuzzy_fanout(pairs.localCheckpoint(), cfg)
         side["s3_dropped_candidates"] = ck.stage(
             "s3_dropped_candidates", ["s1_records"], lambda: dropped_cands
         )

@@ -139,40 +139,8 @@ class TestEntityType:
 
 
 class TestNativeNormalization:
-    def test_native_matches_pandas(self, spark, transcripts_df):
-        """The native JVM regexp chain must reproduce the pandas D3 kernel
-        byte-for-byte over the synthetic corpus (incl. P4 diacritics and P5
-        OCR-noise rows)."""
-        import pyspark.sql.functions as F
-
-        from entity_matching_spark.functions.normalize import (
-            build_udfs,
-            normalize_doc_text_native,
-        )
-
-        udfs = build_udfs()
-        docs = (
-            assemble_conversations(transcripts_df)
-            .select("conv_id", "text")
-        )
-        both = docs.select(
-            "conv_id",
-            udfs["norm_doc_text"]("text").alias("pandas_out"),
-            normalize_doc_text_native(F.col("text"), udfs["translit"]).alias("native_out"),
-        )
-        diff = both.where(F.col("pandas_out") != F.col("native_out"))
-        rows = diff.limit(5).collect()
-        assert not rows, [
-            (r["conv_id"], r["pandas_out"][:120], r["native_out"][:120]) for r in rows
-        ]
-
     def test_native_handles_unicode(self, spark):
-        import pyspark.sql.functions as F
-
-        from entity_matching_spark.functions.normalize import (
-            build_udfs,
-            normalize_doc_text_native,
-        )
+        from entity_matching_spark.functions.normalize import build_udfs
 
         udfs = build_udfs()
         rows = [
@@ -182,9 +150,7 @@ class TestNativeNormalization:
             (None,),
         ]
         df = spark.createDataFrame(rows, "text string")
-        got = df.select(
-            normalize_doc_text_native(F.col("text"), udfs["translit"]).alias("out")
-        ).collect()
+        got = df.select(udfs["norm_doc_text"]("text").alias("out")).collect()
         assert got[0]["out"] == 'Societe Generale - cafe "quote"'
         assert got[1]["out"] == "modem 10 02 text"
         # \t is in the reference's stripped control range (quirk noted in

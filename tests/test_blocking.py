@@ -244,6 +244,10 @@ class TestCandidateCap:
         assert kept2.count() == 13 and dropped2.count() == 0
         # identifier pairs always pass through
         assert kept2.where(F.col("strategy") == "IDENTIFIER").count() == 1
+        # cap disabled -> every input pair kept, nothing dropped
+        kept0, dropped0 = cap_fuzzy_fanout(p3, MatchConfig(max_candidates_per_probe=0))
+        assert sorted(map(tuple, kept0.collect())) == sorted(rows3)
+        assert dropped0.count() == 0
 
 
 class TestCrossPairs:

@@ -13,13 +13,40 @@ import pandas as pd
 import pytest
 
 from entity_matching_spark.functions.normalize import (
-    clean_entity_name_scalar,
+    clean_entity_name,
     dupdet_normalize_name,
-    extract_dba_scalar,
-    normalize_fund_manager_scalar,
-    normalize_name_scalar,
-    normalize_text_scalar,
+    extract_dba_components,
+    normalize_fund_manager,
+    normalize_name,
+    normalize_text,
 )
+
+
+# --- scalar conveniences over the pandas kernels ----------------------------
+
+def _scalar(fn, value, **kw):
+    return fn(pd.Series([value]), **kw).iloc[0]
+
+
+def normalize_text_scalar(value, **kw) -> str:
+    return _scalar(normalize_text, value, **kw)
+
+
+def normalize_name_scalar(value) -> str:
+    return _scalar(normalize_name, value)
+
+
+def normalize_fund_manager_scalar(value) -> str:
+    return _scalar(normalize_fund_manager, value)
+
+
+def clean_entity_name_scalar(value):
+    return _scalar(clean_entity_name, value)
+
+
+def extract_dba_scalar(value):
+    df = extract_dba_components(pd.Series([value]))
+    return df["legal_name"].iloc[0], df["trade_name"].iloc[0]
 
 
 # --- NameNormalizerTest.java ------------------------------------------------

@@ -68,13 +68,6 @@ class TestJaroWinkler:
         assert np.allclose(ab, ba)
         assert ((ab >= 0) & (ab <= 1)).all()
 
-    def test_commons_distance_mode(self):
-        sim = jaro_winkler_batch(["martha"], ["marhta"])[0]
-        dist = jaro_winkler_batch(["martha"], ["marhta"], commons_distance_mode=True)[0]
-        assert dist == pytest.approx(1 - sim)
-        # Quirk Q2: identical strings score 0.0 in the reference's call sites
-        assert jaro_winkler_batch(["same"], ["same"], commons_distance_mode=True)[0] == 0.0
-
 
 class TestLevenshtein:
     @pytest.mark.parametrize("a,b,expected", [

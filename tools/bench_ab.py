@@ -1,21 +1,27 @@
 #!/usr/bin/env python
-"""Interleaved A/B benchmark against a pinned prior commit.
+"""Paired, interleaved A/B of the repo benchmark against a prior commit.
 
-Single-shot cross-session bench numbers on this box are unusable for
-regression detection: the host swings 2-3.5x on memory-bandwidth-bound work
-between sessions (VERDICT r2 bisected a "4x regression" to exactly this).
-The only trustworthy round-over-round comparison is SAME-SESSION interleaved
-A/B: run HEAD and the pinned ref alternately, minutes apart, on the same
-pre-generated corpus, and compare best-of.
+Single-shot cross-session bench numbers on a shared host are unusable for
+regression detection: the host's speed swings between sessions (VERDICT r2
+bisected a "4x regression" to exactly this). The trustworthy comparison is
+SAME-SESSION paired A/B: for pair i, run the benchmark (``erbench/run.py``,
+the command in ``BENCHMARK.json``) once in this checkout (A, the working
+tree) and once in a detached worktree of ``<git-ref>`` (B), both with seed i,
+swapping which side goes first on every pair so neither always pays the
+cold-cache / thermal penalty.
 
 Usage:
-    python tools/bench_ab.py <git-ref> [--rounds 2] [--families 2000]
-                             [--cpus 16] [--keep-worktree]
+    python tools/bench_ab.py <git-ref> [--workload er_transcripts]
+                             [--pairs 10] [--keep-worktree]
 
-Prints one JSON line:
-    {"a_ref": "HEAD", "b_ref": <ref>, "a_runs": [...], "b_runs": [...],
-     "a_best": s, "b_best": s, "speedup_a_over_b": x, ...}
-where each run is the ER pipeline's score-stage seconds and pairs-scored/sec.
+Any run whose output is not ``correct`` aborts the comparison. Prints one
+JSON line:
+    {"a_ref": "working-tree", "b_ref": <ref>, "workload": W, "pairs": k,
+     "metrics": {name: {"unit", "better", "a_median", "a_iqr", "b_median",
+                        "b_iqr", "a_won", "b_won"}}}
+over the end-to-end metrics ``BENCHMARK.json`` declares, where ``a_won`` /
+``b_won`` count the pairs in which that side was strictly better in the
+metric's ``better`` direction.
 """
 
 from __future__ import annotations
@@ -23,6 +29,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -35,78 +42,73 @@ def log(*a):
     print(*a, file=sys.stderr, flush=True)
 
 
-def gen_corpus(path: str, n_families: int) -> None:
-    """Generate the shared corpus ONCE (pandas -> parquet, no Spark) so both
-    sides measure the pipeline, never the generator."""
-    sys.path.insert(0, REPO)
-    from entity_matching_spark.sources.synth import generate_corpus
-
-    pdf, _ = generate_corpus(n_families=n_families)
-    # Spark cannot read nanosecond parquet timestamps (PARQUET_TYPE_ILLEGAL)
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pdf.to_parquet(path, index=False)
-    log(f"[ab] corpus: {len(pdf)} turns -> {path}")
-
-
-def run_side(cwd: str, corpus: str, cpus: int) -> dict:
-    """One bench.py ER-only invocation in ``cwd``; returns the parsed JSON."""
-    env = dict(
-        os.environ,
-        EM_BENCH_TRANSCRIPTS=corpus,
-        EM_BENCH_QUERIES_SKIP="1",
-        EM_BENCH_ER_RUNS="1",  # interleaving supplies the repetition
-        SPARK_GRAFT_CPUS=str(cpus),
-    )
-    out = subprocess.run(
-        [sys.executable, "bench.py"], cwd=cwd, env=env,
-        capture_output=True, text=True, timeout=3600,
-    )
-    if out.returncode != 0:
+def run_side(cwd: str, command: list, workload: str, seed: int, seconds: int) -> dict:
+    """One untraced benchmark run in ``cwd``; returns its metric values."""
+    argv = command + ["--workload", workload, "--seed", str(seed),
+                      "--seconds", str(seconds), "--trace", "0"]
+    out = subprocess.run(argv, cwd=cwd, capture_output=True, text=True, timeout=3600)
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    res = json.loads(lines[-1]) if lines else {}
+    if out.returncode != 0 or not res.get("correct"):
         log(out.stderr[-2000:])
-        raise RuntimeError(f"bench failed in {cwd}")
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
+        raise RuntimeError(f"benchmark run not correct in {cwd} (seed {seed}): {res}")
+    return {k: m["value"] for k, m in res["metrics"].items()}
+
+
+def summarize(a_runs: list, b_runs: list, spec: list) -> dict:
+    def med_iqr(vals):
+        if len(vals) < 2:
+            return vals[0], 0.0
+        q1, q2, q3 = statistics.quantiles(vals, n=4, method="inclusive")
+        return q2, q3 - q1
+
+    out = {}
+    for m in spec:
+        name, sign = m["name"], 1 if m["better"] == "higher" else -1
+        a = [r[name] for r in a_runs]
+        b = [r[name] for r in b_runs]
+        a_med, a_iqr = med_iqr(a)
+        b_med, b_iqr = med_iqr(b)
+        out[name] = {
+            "unit": m["unit"], "better": m["better"],
+            "a_median": a_med, "a_iqr": a_iqr, "b_median": b_med, "b_iqr": b_iqr,
+            "a_won": sum(sign * (x - y) > 0 for x, y in zip(a, b)),
+            "b_won": sum(sign * (y - x) > 0 for x, y in zip(a, b)),
+        }
+    return out
 
 
 def main() -> int:
+    with open(os.path.join(REPO, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    workloads = [w["name"] for w in bench["workloads"]]
+
     ap = argparse.ArgumentParser()
-    ap.add_argument("ref", help="git ref to compare HEAD against")
-    ap.add_argument("--rounds", type=int, default=2)
-    ap.add_argument("--families", type=int, default=2000)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    ap.add_argument("ref", help="git ref to compare the working tree against")
+    ap.add_argument("--workload", choices=workloads, default=workloads[0])
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--keep-worktree", action="store_true")
     args = ap.parse_args()
 
     wt = tempfile.mkdtemp(prefix="em_ab_wt_")
     subprocess.run(["git", "worktree", "add", "--detach", wt, args.ref],
                    cwd=REPO, check=True, capture_output=True)
-    corpus = os.path.join(tempfile.mkdtemp(prefix="em_ab_corpus_"), "transcripts.parquet")
     try:
-        gen_corpus(corpus, args.families)
         a_runs, b_runs = [], []
-        for r in range(args.rounds):
-            # alternate order each round so neither side always pays the
-            # cold-cache / thermal penalty
+        for i in range(args.pairs):
             order = [("A", REPO, a_runs), ("B", wt, b_runs)]
-            if r % 2 == 1:
+            if i % 2 == 1:
                 order.reverse()
             for name, cwd, acc in order:
                 t0 = time.time()
-                res = run_side(cwd, corpus, args.cpus)
-                er = res["er"]
-                acc.append({"score_s": er["score_s"],
-                            "pairs_scored_per_sec": er["pairs_scored_per_sec"],
-                            "er_wall_s": er["er_wall_s"]})
-                log(f"[ab] round {r} side {name}: score {er['score_s']}s, "
-                    f"{er['pairs_scored_per_sec']}/s ({time.time()-t0:.0f}s total)")
-        a_best = max(x["pairs_scored_per_sec"] for x in a_runs)
-        b_best = max(x["pairs_scored_per_sec"] for x in b_runs)
+                acc.append(run_side(cwd, bench["command"], args.workload, i,
+                                    bench["run_seconds"]))
+                log(f"[ab] pair {i} side {name}: {json.dumps(acc[-1])} "
+                    f"({time.time() - t0:.0f}s)")
         print(json.dumps({
-            "a_ref": "HEAD", "b_ref": args.ref,
-            "families": args.families, "cpus": args.cpus, "rounds": args.rounds,
-            "a_runs": a_runs, "b_runs": b_runs,
-            "a_best": a_best, "b_best": b_best,
-            "speedup_a_over_b": round(a_best / b_best, 3),
+            "a_ref": "working-tree", "b_ref": args.ref, "workload": args.workload,
+            "pairs": args.pairs,
+            "metrics": summarize(a_runs, b_runs, bench["end_to_end"]),
         }))
     finally:
         if not args.keep_worktree:
