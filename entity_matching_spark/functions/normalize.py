@@ -91,14 +91,6 @@ _D2_PUNCT_FIXES = [
     (r"\s+([.,;:!?])", r"\1"),
     (r"([.,;:!?])([A-Za-z])", r"\1 \2"),
 ]
-_D2_PUNCT_FIXES_KEEP_NL = [
-    (r"(\d)\.{2,}(\d)", r"\1,\2"),
-    (r"\.{2,}", "."),
-    (r",{2,}", ","),
-    (r"-{2,}", "-"),
-    (r"[^\S\n]+([.,;:!?])", r"\1"),
-    (r"([.,;:!?])([A-Za-z])", r"\1 \2"),
-]
 
 # D6 constants. Alternation result is order-independent for this token set
 # (\b..\b anchors both ends); sorted longest-first for determinism.
@@ -148,9 +140,7 @@ def normalize_unicode_punct(s: pd.Series, preserve_newlines: bool = False) -> pd
     return out.str.strip()
 
 
-def fix_ocr_errors(
-    s: pd.Series, punctuation: bool = True, preserve_newlines: bool = False
-) -> pd.Series:
+def fix_ocr_errors(s: pd.Series, punctuation: bool = True) -> pd.Series:
     """D2 — CharacterNormalizer.fixOcrErrors (java:74-84).
 
     ``punctuation=False`` skips fixOCRPunctuation (java:109-123) — used by the
@@ -159,8 +149,7 @@ def fix_ocr_errors(
     """
     out = _apply_chain(_as_str_series(s), _D2_CHAR_FIXES)
     if punctuation:
-        chain = _D2_PUNCT_FIXES_KEEP_NL if preserve_newlines else _D2_PUNCT_FIXES
-        out = _apply_chain(out, chain)
+        out = _apply_chain(out, _D2_PUNCT_FIXES)
     return out
 
 
@@ -173,9 +162,12 @@ def normalize_text(
 
     Defaults replicate the reference exactly; the document pipeline calls this
     with ``preserve_newlines=True, ocr_punctuation=False`` (quirks Q5/Q6).
+    ``preserve_newlines=True, ocr_punctuation=True`` applies the reference
+    punctuation chain, whose whitespace-before-punctuation rule also removes
+    a newline ahead of ``.,;:!?``.
     """
     out = normalize_unicode_punct(s, preserve_newlines=preserve_newlines)
-    out = fix_ocr_errors(out, punctuation=ocr_punctuation, preserve_newlines=preserve_newlines)
+    out = fix_ocr_errors(out, punctuation=ocr_punctuation)
     return out.str.strip()
 
 

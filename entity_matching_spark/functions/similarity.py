@@ -111,13 +111,6 @@ def jaro_batch_encoded(enc_a, enc_b) -> np.ndarray:
     return jaro
 
 
-def jaro_batch(a_strings, b_strings) -> np.ndarray:
-    """Plain Jaro similarity for each aligned pair, vectorized across the
-    batch. Outer loop runs over character positions (bounded by the longest
-    string); all per-pair work is numpy across the batch dimension."""
-    return jaro_batch_encoded(_encode_padded(a_strings), _encode_padded(b_strings))
-
-
 def common_prefix_len_encoded(enc_a, enc_b, cap: int = 4) -> np.ndarray:
     A, la = enc_a
     B, lb = enc_b
@@ -129,10 +122,6 @@ def common_prefix_len_encoded(enc_a, enc_b, cap: int = 4) -> np.ndarray:
     eq = (A[:, :L] == B[:, :L]) & (pos < minlen)
     # prefix = number of leading equalities
     return np.where(eq, 1, 0).cumprod(axis=1).sum(axis=1)
-
-
-def common_prefix_len(a_strings, b_strings, cap: int = 4) -> np.ndarray:
-    return common_prefix_len_encoded(_encode_padded(a_strings), _encode_padded(b_strings), cap)
 
 
 def encode_strings(strings):

@@ -13,14 +13,18 @@ Scale design (SURVEY.md §4.3.1 — explicit, not left to Catalyst):
   are dropped from pair generation and surfaced via ``profile_block_keys`` —
   the set-oriented analog of the reference's ``LIMIT 100``
   (sql/findByName.sql:10). Dropped keys are returned, never silently ignored.
-- **Salted self-join for hot keys.** Groups larger than
-  ``config.salt_threshold`` (but under the cap) are expanded over bucket
-  pairs: each record with bucket ``b = pmod(xxhash64(conv_id), B)`` is
-  replicated to the B unordered bucket-pairs ``(min(b,t), max(b,t))``, and the
-  self-join key becomes ``(key, i, j)``. One hot key's quadratic work is thus
+- **One self-join for small and hot groups.** Every kept key row gets a
+  bucket ``b`` and is replicated over the bucket pairs that contain it; the
+  self-join key is ``(key, i, j)``. Groups larger than
+  ``config.salt_threshold`` (but under the cap) take
+  ``b = pmod(xxhash64(conv_id), B)`` and are replicated to the B unordered
+  bucket-pairs ``(min(b,t), max(b,t))``; small groups take ``b = 0`` and ride
+  the same join as the one bucket pair ``(0, 0)``. A pair of records matches
+  only in group ``(min(b_a,b_b), max(b_a,b_b))``, so each (pair, key) comes
+  out exactly once with no dedupe. One hot key's quadratic work is thus
   spread across B(B+1)/2 independent tasks instead of one straggler — AQE
-  skew-join cannot do this for pair *generation* because the explosion happens
-  after the join, not in the probe side.
+  skew-join cannot do this for pair *generation* because the explosion
+  happens after the join, not in the probe side.
 - **Strategy precedence.** A pair found by several passes keeps exactly one
   row, tagged with its highest-precedence strategy — the set-oriented
   equivalent of MatchingEngine's ``processedEntityIds`` dedupe
@@ -30,20 +34,20 @@ Scale design (SURVEY.md §4.3.1 — explicit, not left to Catalyst):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from ..config import DEFAULT_CONFIG, MatchConfig
+
+# Hard cap on the sorted-neighborhood boundary sample pulled to the driver
+# (operators/blocking.sorted_neighborhood_keys step 1): bounds driver memory
+# and the range count independently of cfg.shuffle_partitions.
+SN_MAX_SAMPLE = 20_000
 
 # Pass name -> (precedence rank, strategy tag). Precedence follows the
 # reference's sequential staging: identifier passes first
 # (engine/MatchingEngine.java:41-60), then fuzzy name (:62-81), then email
 # (:84-108). Within identifiers, MEI > LEI > EIN > DD mirrors
 # IdentifierMatcher's pass order (engine/IdentifierMatcher.java:26-76).
-# Hard cap on the sorted-neighborhood boundary sample pulled to the driver
-# (operators/blocking.sorted_neighborhood_keys step 1): bounds driver memory
-# and the range count independently of cfg.shuffle_partitions.
-SN_MAX_SAMPLE = 20_000
-
 BLOCKING_PASSES = {
     "mei": (1, "IDENTIFIER"),
     "lei": (2, "IDENTIFIER"),
@@ -58,6 +62,54 @@ BLOCKING_PASSES = {
 
 def _key(pass_name: str, col) -> F.Column:
     return F.concat(F.lit(pass_name + ":"), col)
+
+
+def _pass_map(field: int) -> F.Column:
+    """``BLOCKING_PASSES`` as one map literal: pass -> rank (``field=0``) or
+    strategy tag (``field=1``)."""
+    return F.create_map(
+        *[F.lit(x) for name, row in BLOCKING_PASSES.items() for x in (name, row[field])]
+    )
+
+
+def _capped(keys: DataFrame, cap: int) -> tuple[DataFrame, DataFrame]:
+    """Key-frequency cap: ``(kept, dropped)`` — the key rows of groups of at
+    most ``cap`` records, each with its group size ``n``, and the over-cap
+    (key, n) profile.
+
+    Group sizes via groupBy + shuffle join. Deliberately NO broadcast hint:
+    the distinct-key table scales with the data (every name token is a key),
+    so a forced broadcast becomes a driver bottleneck that grows with input
+    size; AQE still auto-broadcasts when the counts side is genuinely small.
+    A count-window alternative would buffer whole hot-key partitions.
+    """
+    counts = keys.groupBy("key").agg(F.count("*").alias("n"))
+    return keys.join(counts.where(F.col("n") <= cap), "key"), counts.where(F.col("n") > cap)
+
+
+def _best_pass(raw: DataFrame) -> DataFrame:
+    """Strategy precedence over raw (conv_id_a, conv_id_b, pass, key) rows:
+    one row per pair at its min (rank, pass, key), renamed to the pair
+    contract (conv_id_a, conv_id_b, strategy, pass, block_key). Duplicate raw
+    rows cannot change the result."""
+    m = F.min(F.struct(_pass_map(0)[F.col("pass")].alias("rank"), "pass", "key"))
+    return (
+        raw.groupBy("conv_id_a", "conv_id_b")
+        .agg(m.alias("m"))
+        .select(
+            "conv_id_a", "conv_id_b",
+            _pass_map(1)[F.col("m.pass")].alias("strategy"),
+            F.col("m.pass").alias("pass"),
+            F.col("m.key").alias("block_key"),
+        )
+    )
+
+
+def _fuzzy_window(probe: str, other: str) -> WindowSpec:
+    """Per-probe fuzzy candidate order (see ``cap_candidates_per_probe``)."""
+    return Window.partitionBy(probe).orderBy(
+        _pass_map(0)[F.col("pass")].asc(), F.col("block_key"), F.col(other)
+    )
 
 
 def generate_blocking_keys(records: DataFrame, config: MatchConfig | None = None) -> DataFrame:
@@ -225,37 +277,11 @@ def generate_cross_pairs(
     highest-precedence pass — same contract as ``generate_pairs``.
     """
     cfg = config or DEFAULT_CONFIG
-    cap = cfg.max_block_size
-
-    counts = corpus_keys.groupBy("key").agg(F.count("*").alias("n"))
-    dropped = counts.where(F.col("n") > cap)
-    ok = corpus_keys.join(counts.where(F.col("n") <= cap), "key").drop("n")
-
-    a = probe_keys.select("key", F.col("conv_id").alias("conv_id_a"), F.col("pass").alias("pass_a"))
+    ok, dropped = _capped(corpus_keys, cfg.max_block_size)
+    a = probe_keys.select("key", F.col("conv_id").alias("conv_id_a"), "pass")
     b = ok.select("key", F.col("conv_id").alias("conv_id_b"))
-    raw = (
-        a.join(b, "key")
-        .where(F.col("conv_id_a") != F.col("conv_id_b"))
-        .select("conv_id_a", "conv_id_b", F.col("pass_a").alias("pass"), "key")
-    )
-    rank_map = F.create_map(
-        *[F.lit(x) for name, (rank, _) in BLOCKING_PASSES.items() for x in (name, rank)]
-    )
-    strat_map = F.create_map(
-        *[F.lit(x) for name, (_, s) in BLOCKING_PASSES.items() for x in (name, s)]
-    )
-    best = (
-        raw.withColumn("rank", rank_map[F.col("pass")])
-        .groupBy("conv_id_a", "conv_id_b")
-        .agg(F.min(F.struct("rank", "pass", "key")).alias("m"))
-        .select(
-            "conv_id_a", "conv_id_b",
-            strat_map[F.col("m.pass")].alias("strategy"),
-            F.col("m.pass").alias("pass"),
-            F.col("m.key").alias("block_key"),
-        )
-    )
-    return best, dropped
+    raw = a.join(b, "key").where(F.col("conv_id_a") != F.col("conv_id_b"))
+    return _best_pass(raw), dropped
 
 
 def cap_candidates_per_probe(pairs: DataFrame, config: MatchConfig | None = None) -> DataFrame:
@@ -276,16 +302,10 @@ def cap_candidates_per_probe(pairs: DataFrame, config: MatchConfig | None = None
     n = cfg.max_candidates_per_probe
     if not n:
         return pairs
-    rank_map = F.create_map(
-        *[F.lit(x) for name, (rank, _) in BLOCKING_PASSES.items() for x in (name, rank)]
-    )
     is_fuzzy = F.col("strategy") == "FUZZY_NAME"
-    w = Window.partitionBy("conv_id_a").orderBy(
-        rank_map[F.col("pass")].asc(), F.col("block_key"), F.col("conv_id_b")
-    )
     fuzzy = (
         pairs.where(is_fuzzy)
-        .withColumn("_cand_rank", F.row_number().over(w))
+        .withColumn("_cand_rank", F.row_number().over(_fuzzy_window("conv_id_a", "conv_id_b")))
         .where(F.col("_cand_rank") <= n)
         .drop("_cand_rank")
     )
@@ -303,10 +323,8 @@ def cap_fuzzy_fanout(
     keeps a candidate that survives either probe's ``LIMIT 100``
     (sql/findByName.sql:8-10), so the pair is KEPT if it ranks within the
     top-``max_candidates_per_probe`` of EITHER endpoint's candidate list.
-    Ordering per endpoint mirrors ``cap_candidates_per_probe``: blocking-pass
-    precedence (the exact cleaned-short-name pass ahead of token /
-    sorted-neighborhood, the reference's exact/exact-short/ELSE tiering),
-    then (block_key, other-id) for determinism.
+    Each endpoint's list is ranked in ``cap_candidates_per_probe``'s order
+    (``_fuzzy_window``).
 
     Returns ``(kept, dropped)``; dropped pairs are reported, never silently
     discarded (same discipline as ``generate_pairs``'s hot-key profile).
@@ -329,20 +347,11 @@ def cap_fuzzy_fanout(
     is_fuzzy = F.col("strategy") == "FUZZY_NAME"
     if not n:
         return pairs, pairs.where(is_fuzzy).limit(0)
-    rank_map = F.create_map(
-        *[F.lit(x) for name, (rank, _) in BLOCKING_PASSES.items() for x in (name, rank)]
-    )
-    wa = Window.partitionBy("conv_id_a").orderBy(
-        rank_map[F.col("pass")].asc(), F.col("block_key"), F.col("conv_id_b")
-    )
-    wb = Window.partitionBy("conv_id_b").orderBy(
-        rank_map[F.col("pass")].asc(), F.col("block_key"), F.col("conv_id_a")
-    )
     ranked = (
         pairs.where(is_fuzzy)
         .withColumns({
-            "_ra": F.row_number().over(wa),
-            "_rb": F.row_number().over(wb),
+            "_ra": F.row_number().over(_fuzzy_window("conv_id_a", "conv_id_b")),
+            "_rb": F.row_number().over(_fuzzy_window("conv_id_b", "conv_id_a")),
         })
         .localCheckpoint()
     )
@@ -371,73 +380,26 @@ def generate_pairs(
     (never silently discarded — the caller logs it, SURVEY.md §4.3.1).
     """
     cfg = config or DEFAULT_CONFIG
-    cap = cfg.max_block_size
-    salt_at = cfg.salt_threshold
     B = max(2, cfg.salt_buckets)
+    kept, dropped = _capped(keys, cfg.max_block_size)
 
-    # Group sizes via groupBy + shuffle join. Deliberately NO broadcast hint:
-    # the distinct-key table scales with the data (every name token is a key),
-    # so a forced broadcast becomes a driver bottleneck that grows with input
-    # size; AQE still auto-broadcasts when the counts side is genuinely small.
-    # A count-window alternative would buffer whole hot-key partitions.
-    counts = keys.groupBy("key").agg(F.count("*").alias("n"))
-    dropped = counts.where(F.col("n") > cap)
-    keyed = keys.join(counts.where(F.col("n") <= cap), "key")
-
-    small = keyed.where(F.col("n") <= salt_at).drop("n")
-    large = keyed.where(F.col("n") > salt_at).drop("n")
-
-    def join_pairs(left: DataFrame, right: DataFrame, on: list) -> DataFrame:
-        a = left.select(*on, F.col("conv_id").alias("conv_id_a"), F.col("pass").alias("pass_a"))
-        b = right.select(*on, F.col("conv_id").alias("conv_id_b"))
-        return (
-            a.join(b, on)
-            .where(F.col("conv_id_a") < F.col("conv_id_b"))
-            .select("conv_id_a", "conv_id_b", F.col("pass_a").alias("pass"), F.col("key"))
-        )
-
-    # small groups: plain per-key self-join (shuffle on key; AQE coalesces)
-    pairs_small = join_pairs(small, small, ["key"])
-
-    # hot groups: bucket-pair salt expansion (see module docstring)
-    bkt = large.withColumn("b", F.pmod(F.xxhash64("conv_id"), F.lit(B)).cast("int"))
-    t = F.explode(F.sequence(F.lit(0), F.lit(B - 1))).alias("t")
-    exp = bkt.select("key", "pass", "conv_id", "b", t).select(
-        "key", "pass", "conv_id", "b",
-        F.least("b", "t").alias("i"), F.greatest("b", "t").alias("j"),
-    ).dropDuplicates(["key", "conv_id", "i", "j"])
-    # within group (i,j): left side contributes bucket-i records, right side
-    # bucket-j records (for i==j both sides are the same bucket)
-    lft = exp.where(F.col("b") == F.col("i"))
-    rgt = exp.where(F.col("b") == F.col("j"))
-    pairs_large = (
-        join_pairs(lft, rgt, ["key", "i", "j"])
-        .unionByName(
-            # i<j pairs where the lexicographically-smaller conv sits in j
-            join_pairs(rgt, lft, ["key", "i", "j"])
-        )
-        .dropDuplicates(["conv_id_a", "conv_id_b", "key"])
+    # one self-join on (key, i, j) for every group (see module docstring):
+    # hot rows fan out over the B bucket pairs holding their bucket, small
+    # groups sit at (0, 0) and join exactly as a plain per-key self-join
+    hot = F.col("n") > cfg.salt_threshold
+    bucket = F.when(hot, F.pmod(F.xxhash64("conv_id"), F.lit(B))).otherwise(0).cast("int")
+    fan = F.when(hot, F.sequence(F.lit(0), F.lit(B - 1))).otherwise(F.array(F.lit(0)))
+    exp = (
+        kept.select("key", "pass", "conv_id", bucket.alias("b"), F.explode(fan).alias("t"))
+        .withColumns({"i": F.least("b", "t"), "j": F.greatest("b", "t")})
     )
-
-    all_pairs = pairs_small.unionByName(pairs_large)
-
-    # precedence dedupe: one row per pair, min (rank, pass, key)
-    rank_map = F.create_map(
-        *[F.lit(x) for name, (rank, _) in BLOCKING_PASSES.items() for x in (name, rank)]
+    on = ["key", "i", "j"]
+    a = exp.select(*on, "pass", F.col("conv_id").alias("conv_id_a"), F.col("b").alias("b_a"))
+    b = exp.select(*on, F.col("conv_id").alias("conv_id_b"), F.col("b").alias("b_b"))
+    # a pair x < y under one key passes only in group (min(bx,by), max(bx,by))
+    raw = a.join(b, on).where(
+        (F.col("conv_id_a") < F.col("conv_id_b"))
+        & (F.least("b_a", "b_b") == F.col("i"))
+        & (F.greatest("b_a", "b_b") == F.col("j"))
     )
-    strat_map = F.create_map(
-        *[F.lit(x) for name, (_, s) in BLOCKING_PASSES.items() for x in (name, s)]
-    )
-    tagged = all_pairs.withColumn("rank", rank_map[F.col("pass")])
-    best = (
-        tagged.groupBy("conv_id_a", "conv_id_b")
-        .agg(F.min(F.struct("rank", "pass", "key")).alias("m"))
-        .select(
-            "conv_id_a",
-            "conv_id_b",
-            strat_map[F.col("m.pass")].alias("strategy"),
-            F.col("m.pass").alias("pass"),
-            F.col("m.key").alias("block_key"),
-        )
-    )
-    return best, dropped
+    return _best_pass(raw), dropped

@@ -33,9 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, MatchConfig
 from ..operators.assemble import build_records
-from ..operators.blocking import (
-    cap_fuzzy_fanout, generate_blocking_keys, generate_pairs, profile_block_keys,
-)
+from ..operators.blocking import cap_fuzzy_fanout, generate_blocking_keys, generate_pairs
 from ..operators.cluster import assign_clusters, connected_components
 from ..operators.score import match_edges, score_pairs
 from .checkpoint import StageCheckpointer

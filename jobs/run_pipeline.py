@@ -36,8 +36,7 @@ def main(argv=None) -> int:
                     help="synthetic corpus size when --input is omitted")
     ap.add_argument("--master", default=None, help="override master (default: from spark-submit)")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--fresh", action="store_true", help="ignore+overwrite existing checkpoints")
+    ap.add_argument("--no-resume", action="store_true", help="ignore+overwrite existing checkpoints")
     ap.add_argument("--profile", action="store_true",
                     help="also run the corpus-profiling stages (top-k vocabulary "
                          "+ curation keep/drop funnel) into <out>/profile")
@@ -85,7 +84,7 @@ def main(argv=None) -> int:
     t0 = time.time()
     result = run_pipeline(
         spark, transcripts, args.out, DEFAULT_CONFIG,
-        resume=not (args.no_resume or args.fresh),
+        resume=not args.no_resume,
         audit_lineage=args.audit_lineage,
     )
     n_clusters = result.clusters.select("cluster_id").distinct().count()
@@ -112,7 +111,7 @@ def main(argv=None) -> int:
         prof = run_profile(
             spark, transcripts, os.path.join(args.out, "profile"),
             benchmark=bench, vocab_k=args.vocab_k,
-            resume=not (args.no_resume or args.fresh),
+            resume=not args.no_resume,
             audit_lineage=args.audit_lineage,
         )
         kept = prof["curation"].agg(

@@ -91,10 +91,12 @@ class TestScaleControls:
         # no pair row may originate from a dropped key
         assert pairs.where(F.col("block_key").isin(list(hot))).count() == 0
 
-    def test_salted_join_equals_plain_join(self, spark, keys_df):
+    @pytest.mark.parametrize("salt_threshold", [0, 2])
+    def test_salted_join_equals_plain_join(self, spark, keys_df, salt_threshold):
         """The bucket-pair salted self-join produces exactly the same pair set
-        as the unsalted join (salt_threshold=0 forces everything salted)."""
-        cfg_salted = MatchConfig(salt_threshold=0, salt_buckets=4)
+        as the unsalted join (salt_threshold=0 forces everything salted; 2
+        puts hot and small groups in the same join)."""
+        cfg_salted = MatchConfig(salt_threshold=salt_threshold, salt_buckets=4)
         cfg_plain = MatchConfig(salt_threshold=10**9)
         p_salted, _ = generate_pairs(keys_df, cfg_salted)
         p_plain, _ = generate_pairs(keys_df, cfg_plain)

@@ -344,7 +344,7 @@ class TestProfileStages:
         import os
         import sys
 
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         import jobs.run_pipeline as cli
 
         out = str(tmp_path / "cliout")
@@ -369,7 +369,7 @@ class TestProfileStages:
         import os
         import sys
 
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         import jobs.run_pipeline as cli
 
         out = str(tmp_path / "cliaudit")

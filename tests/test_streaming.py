@@ -603,7 +603,7 @@ class TestCompactCorpusCLI:
 
         from entity_matching_spark.streaming.ingest import incremental_match
 
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         import jobs.compact_corpus as cli
 
         ddl = ("conv_id string, turn_idx int, role string, text string, "

@@ -8,10 +8,12 @@ from __future__ import annotations
 
 import argparse
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script lives in, not whichever copy is installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
