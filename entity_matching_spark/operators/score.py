@@ -209,10 +209,7 @@ def _tier_predicates() -> dict[str, F.Column]:
     }
 
 
-def _prepare_sides(records: DataFrame) -> tuple[DataFrame, DataFrame]:
-    rec = records
-    if "has_tax" not in rec.columns:
-        rec = rec.withColumn("has_tax", F.col("norm_tax_text").isNotNull())
+def _prepare_sides(rec: DataFrame) -> tuple[DataFrame, DataFrame]:
     # I13 input: does any OTHER record share this cleaned-short-name key?
     # Window count on the records table (null keys get singleton partitions)
     # — one records-sized shuffle instead of broadcasting a key-counts table

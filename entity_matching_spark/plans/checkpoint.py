@@ -2,11 +2,17 @@
 
 North-rule requirement: "checkpoints each stage (blocking output, scored
 pairs, component labels) ... with per-partition lineage and metrics so any
-stage is resumable". Each stage is partitioned Parquet plus a JSON manifest
-carrying the lineage columns (rows, content hash, part files, params and
-upstream hashes). ``StageCheckpointer.stage`` is the one stage runner: both
-``plans/pipeline.run_pipeline`` and ``run_profile`` drive their DAGs
+stage is resumable". Each stage is a Parquet directory plus a JSON manifest
+carrying the lineage columns (rows, content hash, part files, schema, params
+and upstream hashes). ``StageCheckpointer.stage`` is the one stage runner:
+both ``plans/pipeline.run_pipeline`` and ``run_profile`` drive their DAGs
 through it.
+
+The manifest is the stage's one handle. ``read`` is the only reader of a
+stage directory and pins the schema the manifest records, so a read-back
+runs no Parquet schema-inference job. The checkpointer keeps every manifest
+it wrote, resumed or read back, and ``metrics()`` returns those in run order
+(another run's manifests in the same work dir are not listed).
 
 Every manifest read, write and listing, and the part-file listing, goes
 through Spark's Hadoop FS layer (``_fs*`` below; ``streaming/ingest.py``
@@ -43,6 +49,7 @@ import json
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import DataType
 
 MANIFEST_NAME = "_manifest.json"
 
@@ -97,9 +104,8 @@ def _fs_read_text(spark: SparkSession, path: str) -> str:
 
 def _row_hash(columns: list[str]) -> F.Column:
     """Order-independent per-row digest: xxhash64 over the SORTED column
-    list (sorted so the pre-write plan and a post-write re-read — where
-    ``partitionBy`` columns move to the end of the schema — hash the same
-    bytes), summed in decimal so the total cannot overflow under ANSI mode.
+    list (the pinned stage content hashes depend on that order), summed in
+    decimal so the total cannot overflow under ANSI mode.
     Makes the manifest fingerprint CONTENT-sensitive: a same-cardinality,
     same-schema recompute with different values still invalidates downstream
     checkpoints (``_fingerprint`` includes it)."""
@@ -121,6 +127,15 @@ def _fingerprint(manifest: dict) -> str:
         sort_keys=True,
     ).encode()
     return hashlib.sha256(payload).hexdigest()[:12]
+
+
+def _complete(m: dict | None, params_hash: str, upstream_hash: str) -> bool:
+    return (
+        m is not None
+        and m.get("params_hash") == params_hash
+        and m.get("upstream_hash", "") == upstream_hash
+        and m.get("status") == "complete"
+    )
 
 
 class StageCheckpointer:
@@ -147,6 +162,8 @@ class StageCheckpointer:
         # per-stage output fingerprints; each stage's upstream_hash chains
         # them so a changed upstream output invalidates every downstream stage
         self.fingerprints: dict[str, str] = {"input": input_fingerprint}
+        # this run's manifests in run order: written, resumed or read back
+        self._manifests: dict[str, dict] = {}
         fs, hpath, _ = _fs(SparkSession.active(), self.base_dir)
         fs.mkdirs(hpath)
 
@@ -164,8 +181,9 @@ class StageCheckpointer:
         read the stage back, and record its fingerprint for the stages that
         name it as an upstream."""
         up = "+".join(f"{u}:{self.fingerprints[u]}" for u in upstreams)
-        if self.resume and self.is_complete(name, self.run_id, up):
-            m = self.manifest(name)
+        m = self.manifest(name) if self.resume else None
+        if _complete(m, self.run_id, up):
+            self._manifests[name] = m
         else:
             m = self.write(name, build(), self.run_id, up)
         self.fingerprints[name] = _fingerprint(m)
@@ -180,22 +198,11 @@ class StageCheckpointer:
         return json.loads(_fs_read_text(spark, p))
 
     def is_complete(self, stage: str, params_hash: str, upstream_hash: str = "") -> bool:
-        m = self.manifest(stage)
-        return (
-            m is not None
-            and m.get("params_hash") == params_hash
-            and m.get("upstream_hash", "") == upstream_hash
-            and m.get("status") == "complete"
-        )
+        return _complete(self.manifest(stage), params_hash, upstream_hash)
 
     # -- write / read --------------------------------------------------------
     def write(
-        self,
-        stage: str,
-        df: DataFrame,
-        params_hash: str,
-        upstream_hash: str = "",
-        partition_by: list[str] | None = None,
+        self, stage: str, df: DataFrame, params_hash: str, upstream_hash: str = ""
     ) -> dict:
         """Materialize a stage + manifest. Returns the manifest dict.
 
@@ -209,39 +216,19 @@ class StageCheckpointer:
         # invalidate BEFORE the overwrite: a run that dies mid-write (or
         # fails a check below) must not leave the previous run's manifest
         # vouching for files this write has already clobbered
+        self._manifests.pop(stage, None)
         fs, mpath, _ = _fs(spark, self._manifest_path(stage))
         fs.delete(mpath, False)
         obs = Observation()
-        # Empty-string values in a STRING partition column do not round-trip:
-        # the writer materializes '' as __HIVE_DEFAULT_PARTITION__ and every
-        # reader parses that back as NULL, so the audit re-read would hash
-        # differently from the pre-write plan (xxhash64 is NULL-sensitive) and
-        # blame intact files. Counting them rides the same write scan as the
-        # lineage metrics (one extra conditional sum per string partition
-        # column — no second pass) so BOTH modes fail with the real cause
-        # before persisting a checkpoint that cannot round-trip.
-        dtypes = dict(df.dtypes)
-        empty_part_cols = [
-            c for c in (partition_by or []) if dtypes.get(c) == "string"
-        ]
         observed = df.observe(
             obs,
             F.count(F.lit(1)).alias("rows"),
             F.sum(_row_hash(df.columns)).alias("chash"),
-            *[
-                F.sum(F.when(F.col(c) == "", 1).otherwise(0)).alias(f"empty_{i}")
-                for i, c in enumerate(empty_part_cols)
-            ],
         )
         t0 = time.time()
-        writer = observed.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        observed.write.mode("overwrite").parquet(path)
         wall_ms = int((time.time() - t0) * 1000)
         vals = obs.get  # the write action already completed; no extra job
-        output_rows = vals["rows"]
-        content_hash = str(vals["chash"])
 
         # per-partition lineage without re-reading data: the materialized
         # part files (path relative to the stage dir + bytes) from FS
@@ -258,83 +245,72 @@ class StageCheckpointer:
                 files.append({"file": rel, "bytes": st.getLen()})
         files.sort(key=lambda x: x["file"])
 
-        # enforced in BOTH modes, not just under audit: a checkpoint whose
-        # read-back differs from what was written ('' -> NULL) would make a
-        # RESUMED run silently diverge from a fresh one, and the manifest's
-        # observed pre-write hash would no longer describe the on-disk data.
-        # The counters already rode the write scan, so the check is free.
-        for i, c in enumerate(empty_part_cols):
-            n_empty = vals.get(f"empty_{i}") or 0
-            if n_empty > 0:
-                raise RuntimeError(
-                    f"stage {stage}: partition column {c!r} has {n_empty} "
-                    f"empty-string value(s) — '' is written as "
-                    f"__HIVE_DEFAULT_PARTITION__ and reads back as NULL, so "
-                    f"this checkpoint would not round-trip (a resumed run "
-                    f"reading it would diverge from a fresh run, and the "
-                    f"lineage audit's re-read hash would differ on intact "
-                    f"files); coalesce '' to NULL or a sentinel before "
-                    f"checkpointing, or drop the column from partition_by"
-                )
-
-        per_part: list[dict] = []
-        if self.audit_lineage:
-            # pin the read to the PRE-WRITE schema: parquet partition-column
-            # inference would re-read a string partition value like '00' as
-            # int 0 — and xxhash64 is type-sensitive, so the audit would
-            # raise on perfectly intact data. A post-hoc cast back cannot
-            # fix this (int 0 round-trips to '0', not the original '00');
-            # supplying the schema makes Spark parse the raw directory value
-            # directly into the declared type.
-            written = spark.read.schema(df.schema).parquet(path)
-            rh = _row_hash(written.columns)
-            per_part = [
-                {
-                    "partition_id": r["pid"],
-                    "rows": r["rows"],
-                    "content_hash": str(r["chash"]),
-                }
-                for r in written.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("rows"), F.sum(rh).alias("chash"))
-                .orderBy("pid").collect()
-            ]
-            audit_rows = sum(p["rows"] for p in per_part)
-            audit_hash = str(sum(int(p["content_hash"]) for p in per_part)) if per_part else str(None)
-            if audit_rows != output_rows or audit_hash != content_hash:
-                raise RuntimeError(
-                    f"stage {stage}: lineage audit mismatch — observed "
-                    f"(rows={output_rows}, hash={content_hash}) vs materialized "
-                    f"(rows={audit_rows}, hash={audit_hash}); the written files "
-                    f"do not match what the plan produced"
-                )
-
         m = {
             "stage": stage,
             "run_id": self.run_id,
             "status": "complete",
             "params_hash": params_hash,
             "upstream_hash": upstream_hash,
-            "output_rows": output_rows,
-            "content_hash": content_hash,
+            "output_rows": vals["rows"],
+            "content_hash": str(vals["chash"]),
             "wall_ms": wall_ms,
             "path": path,
             "files": files,
-            "partitions": per_part,
+            "partitions": [],
             "schema": df.schema.simpleString(),
         }
-        _fs_write_text_atomic(spark, self._manifest_path(stage), json.dumps(m, indent=2))
+        # kept before the audit, whose re-read goes through read(); dropped
+        # again unless the manifest commits
+        self._manifests[stage] = m
+        try:
+            if self.audit_lineage:
+                m["partitions"] = self._audit(spark, m)
+            _fs_write_text_atomic(spark, self._manifest_path(stage), json.dumps(m, indent=2))
+        except BaseException:
+            del self._manifests[stage]
+            raise
         return m
 
+    def _audit(self, spark: SparkSession, m: dict) -> list[dict]:
+        """Per-partition rows + content hashes recomputed from the written
+        files; raises unless they add up to the observed fingerprint."""
+        written = self.read(spark, m["stage"])
+        rh = _row_hash(written.columns)
+        per_part = [
+            {
+                "partition_id": r["pid"],
+                "rows": r["rows"],
+                "content_hash": str(r["chash"]),
+            }
+            for r in written.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(F.count("*").alias("rows"), F.sum(rh).alias("chash"))
+            .orderBy("pid").collect()
+        ]
+        audit_rows = sum(p["rows"] for p in per_part)
+        audit_hash = str(sum(int(p["content_hash"]) for p in per_part)) if per_part else str(None)
+        if audit_rows != m["output_rows"] or audit_hash != m["content_hash"]:
+            raise RuntimeError(
+                f"stage {m['stage']}: lineage audit mismatch — observed "
+                f"(rows={m['output_rows']}, hash={m['content_hash']}) vs "
+                f"materialized (rows={audit_rows}, hash={audit_hash}); the "
+                f"written files do not match what the plan produced"
+            )
+        return per_part
+
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self.stage_dir(stage))
+        """The one reader of a stage directory. It pins the schema the
+        stage's manifest records (Parquet schema inference would cost a
+        Spark job per read). A stage this run has not written or resumed is
+        looked up on disk and then kept like one."""
+        if stage not in self._manifests:
+            m = self.manifest(stage)
+            if m is None:
+                raise FileNotFoundError(f"stage {stage}: no manifest under {self.base_dir}")
+            self._manifests[stage] = m
+        schema = DataType.fromDDL(self._manifests[stage]["schema"])
+        return spark.read.schema(schema).parquet(self.stage_dir(stage))
 
     def metrics(self) -> list[dict]:
-        """All stage manifests (the run's lineage/metrics sidecar table)."""
-        spark = SparkSession.active()
-        fs, hpath, _ = _fs(spark, self.base_dir)
-        names = sorted(st.getPath().getName() for st in fs.listStatus(hpath))
-        return [
-            json.loads(_fs_read_text(spark, f"{self.base_dir}/{n}"))
-            for n in names
-            if n.endswith(MANIFEST_NAME)
-        ]
+        """This run's stage manifests in run order (the lineage/metrics
+        sidecar table)."""
+        return list(self._manifests.values())

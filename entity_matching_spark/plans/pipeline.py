@@ -258,11 +258,10 @@ def run_profile(
                               n_shards=pack_shards)
 
     packing = ck.stage("p4_packing", ["p1_documents", "p3_curation"], build_packing)
-    profile_stages = {"p1_documents", "p2_vocab", "p3_curation", "p4_packing"}
     return {
         "documents": docs,
         "vocab": vocab,
         "curation": curation,
         "packing": packing,
-        "metrics": [m for m in ck.metrics() if m["stage"] in profile_stages],
+        "metrics": ck.metrics(),
     }

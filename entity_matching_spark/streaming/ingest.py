@@ -627,7 +627,9 @@ def incremental_match(
         )
         if corpus_keys is not None:
             cross, _dropped2 = generate_cross_pairs(batch_keys, corpus_keys, cfg)
-            pairs = pairs.unionByName(cross).dropDuplicates(["conv_id_a", "conv_id_b"])
+            # disjoint: self pairs have both ends in this batch, cross pairs
+            # one end in the corpus read, which excludes this batch
+            pairs = pairs.unionByName(cross)
         pairs = pairs.localCheckpoint()  # pair set is reused for participants + scoring
 
         # restrict the sides table to PAIR PARTICIPANTS before any scoring

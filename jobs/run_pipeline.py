@@ -71,6 +71,7 @@ def main(argv=None) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from entity_matching_spark.config import DEFAULT_CONFIG
+    from entity_matching_spark.plans.checkpoint import _fs_write_text_atomic
     from entity_matching_spark.plans.pipeline import run_pipeline
 
     if args.input:
@@ -128,8 +129,8 @@ def main(argv=None) -> int:
             ],
         }
     print(json.dumps(summary))
-    with open(os.path.join(args.out, "run_summary.json"), "w") as f:
-        json.dump(summary, f, indent=2)
+    _fs_write_text_atomic(spark, os.path.join(args.out, "run_summary.json"),
+                          json.dumps(summary, indent=2))
     return 0
 
 

@@ -39,63 +39,82 @@ class TestCheckpointer:
     def test_audit_mode_partitions_and_hash_parity(self, spark, tmp_path):
         """audit_lineage=True re-reads the materialized stage, records the
         per-partition content breakdown, and must land on the SAME hash the
-        single-pass observe computed — including for a partitionBy stage,
-        where the re-read reorders columns (the sorted-column row digest is
-        what makes both paths agree)."""
-        # 'part' is a STRING of ZERO-PADDED numeric-looking values on
-        # purpose: parquet partition-type inference would re-read '00' as
-        # int 0, and a lossy int->string round trip would yield '0' — the
-        # audit re-read must pin the pre-write schema so the raw directory
-        # value survives byte-exactly
+        single-pass observe computed."""
         df = spark.range(200).selectExpr(
             "id AS x", "lpad(CAST(id % 3 AS STRING), 2, '0') AS part",
             "CAST(id * 7 AS STRING) AS s"
         )
         fast = StageCheckpointer(str(tmp_path / "fast"), run_id="t")
         audit = StageCheckpointer(str(tmp_path / "audit"), run_id="t", audit_lineage=True)
-        for pby in (None, ["part"]):
-            stage = f"s_{'p' if pby else 'flat'}"
-            mf = fast.write(stage, df, params_hash="h", partition_by=pby)
-            ma = audit.write(stage, df, params_hash="h", partition_by=pby)
-            assert mf["output_rows"] == ma["output_rows"] == 200
-            assert mf["content_hash"] == ma["content_hash"], stage
-            assert ma["partitions"] and sum(p["rows"] for p in ma["partitions"]) == 200
-            assert str(sum(int(p["content_hash"]) for p in ma["partitions"])) \
-                == ma["content_hash"]
+        stage = "s_flat"
+        mf = fast.write(stage, df, params_hash="h")
+        ma = audit.write(stage, df, params_hash="h")
+        assert mf["output_rows"] == ma["output_rows"] == 200
+        assert mf["content_hash"] == ma["content_hash"], stage
+        assert ma["partitions"] and sum(p["rows"] for p in ma["partitions"]) == 200
+        assert str(sum(int(p["content_hash"]) for p in ma["partitions"])) \
+            == ma["content_hash"]
 
-    def test_rejects_empty_string_partition_value(self, spark, tmp_path):
-        """'' in a STRING partition column is materialized as
-        __HIVE_DEFAULT_PARTITION__ and reads back as NULL — unfixable by
-        schema pinning, so the checkpoint would not round-trip (a resumed
-        run reading it would silently diverge from a fresh one). The
-        write-side observed empty-count must fail loud with the REAL cause
-        in BOTH modes — single-pass and audit — and the same data passes
-        once '' is coalesced to NULL (which round-trips)."""
-        df = spark.range(20).selectExpr(
-            "id AS x", "CASE WHEN id % 5 = 0 THEN '' ELSE 'a' END AS part"
+    def test_read_back_pins_manifest_schema(self, spark, tmp_path):
+        """A stage reads back with the schema its manifest records: neither
+        the read after a write nor a resume through a new checkpointer runs
+        a Parquet schema-inference job; nested and decimal types and ''
+        strings round-trip; metrics() lists only this checkpointer's stages
+        even when the work dir holds another one's manifests."""
+        from decimal import Decimal
+
+        sc = spark.sparkContext
+
+        def jobs_during(fn):
+            group = f"read-back-{id(fn)}"
+            prev = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(group, "read-back")
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", prev)
+            return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+        def no_rebuild():
+            raise AssertionError("a complete stage must resume, not rebuild")
+
+        df = spark.createDataFrame(
+            [("", [("k", 1), ("", None)], Decimal("1234567890123456789012345")),
+             ("a", [], None)],
+            "s string, arr array<struct<k:string,v:int>>, d decimal(25,0)",
         )
-        fixed = df.selectExpr("x", "nullif(part, '') AS part")
-        audit = StageCheckpointer(str(tmp_path / "a"), run_id="t", audit_lineage=True)
-        fast = StageCheckpointer(str(tmp_path / "f"), run_id="t")
-        for ck in (audit, fast):
-            with pytest.raises(RuntimeError, match="empty-string"):
-                ck.write("s_bad", df, params_hash="h", partition_by=["part"])
-            m = ck.write("s_ok", fixed, params_hash="h", partition_by=["part"])
-            assert m["output_rows"] == 20
-            # non-partitioned '' values are data, not directory names — fine
-            assert ck.write("s_flat", df, params_hash="h")["output_rows"] == 20
+        wd = str(tmp_path)
+        other = StageCheckpointer(wd, run_id="o")
+        other.write("s_other", spark.range(3), params_hash="o")
+        ck = StageCheckpointer(wd, run_id="t")
+        ck.write("s_mixed", df, params_hash="t")
+
+        fresh, jobs = jobs_during(lambda: ck.read(spark, "s_mixed"))
+        assert jobs == []
+        ck2 = StageCheckpointer(wd, run_id="t")
+        resumed, jobs = jobs_during(lambda: ck2.stage("s_mixed", [], no_rebuild))
+        assert jobs == []
+
+        for got in (fresh, resumed):
+            assert got.schema == df.schema
+            assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
+        assert sorted(r["s"] for r in resumed.collect()) == ["", "a"]
+        assert [m["stage"] for m in ck.metrics()] == ["s_mixed"]
+        assert [m["stage"] for m in ck2.metrics()] == ["s_mixed"]
+        assert [m["stage"] for m in other.metrics()] == ["s_other"]
 
     def test_crash_mid_overwrite_invalidates_manifest(self, spark, tmp_path):
-        """Run A commits stage s; run B overwrites s and fails after the
-        overwrite (here: the '' partition guard). A later run with A's
-        params must not resume from the files B clobbered."""
+        """Run A commits stage s; run B overwrites s and fails mid-write
+        (here: a row that raises). A later run with A's params must not
+        resume from the files B clobbered."""
         ck = StageCheckpointer(str(tmp_path), run_id="t")
         ck.write("s", spark.range(10).selectExpr("id AS x", "'a' AS part"),
-                 params_hash="h1", partition_by=["part"])
+                 params_hash="h1")
         assert ck.is_complete("s", "h1")
-        with pytest.raises(RuntimeError, match="empty-string"):
-            ck.write("s", spark.range(10).selectExpr("id AS x", "'' AS part"),
-                     params_hash="h2", partition_by=["part"])
+        with pytest.raises(Exception, match="crash mid-write"):
+            ck.write("s", spark.range(10).selectExpr(
+                "id AS x", "IF(id = 7, raise_error('crash mid-write'), 'b') AS part"),
+                params_hash="h2")
         assert not ck.is_complete("s", "h1")
         assert ck.manifest("s") is None
 
@@ -165,10 +184,13 @@ class TestPipelineResume:
 
     def test_config_change_invalidates(self, spark, small_transcripts, tmp_path):
         wd = str(tmp_path / "run3")
-        run_pipeline(spark, small_transcripts, wd, MatchConfig())
+        cfg = MatchConfig()
+        run_pipeline(spark, small_transcripts, wd, cfg)
         ck = StageCheckpointer(wd)
+        up = ck.manifest("s3_pairs")["upstream_hash"]
         h2 = MatchConfig(sorted_neighborhood_window=5).params_hash()
-        assert not ck.is_complete("s3_pairs", h2, "s1")
+        assert ck.is_complete("s3_pairs", cfg.params_hash(), up)
+        assert not ck.is_complete("s3_pairs", h2, up)
 
     def test_metrics_sidecar(self, spark, small_transcripts, tmp_path):
         wd = str(tmp_path / "run4")
@@ -373,7 +395,9 @@ class TestProfileStages:
         import jobs.run_pipeline as cli
 
         out = str(tmp_path / "cliaudit")
-        rc = cli.main(["--out", out, "--families", "12", "--audit-lineage"])
+        # a file:// URI: the manifests and the run summary go through the
+        # Hadoop FS, not a driver-local open()
+        rc = cli.main(["--out", "file://" + out, "--families", "12", "--audit-lineage"])
         assert rc == 0
         with open(os.path.join(out, "s1_records_manifest.json")) as f:
             m = json.load(f)
