@@ -1,12 +1,15 @@
 """Constant lookup tables used by normalization, validation and scoring.
 
 Each table replicates a reference constant set verbatim (citations into
-/root/reference). These are tiny and broadcast-friendly: in Spark they are
-used either inside pandas UDFs (closure capture) or as literal `isin` lists /
-`create_map` expressions so Catalyst folds them into codegen.
+/root/reference). These are tiny: in Spark they are used either inside pandas
+UDFs (closure capture) or as plan constants through ``const``, the one way a
+Python constant enters a plan — a single SQL literal per table, which Catalyst
+folds into codegen.
 """
 
 from __future__ import annotations
+
+import math
 
 # ISO 3166-1 alpha-2 codes — util/CountryCodeValidator.java:11-33 (249 codes)
 ISO_COUNTRY_CODES = frozenset(
@@ -256,35 +259,40 @@ KNOWN_FUND_MANAGER_DOMAINS = frozenset([
 ])
 
 
-def sql_str(s: str) -> str:
-    """Escape a Python string as a Spark SQL single-quoted literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def sql_str_array(strings) -> "Column":  # noqa: F821
-    """A constant array<string> as ONE ``F.expr`` round trip.
-
-    ``F.lit(list)`` in classic py4j mode still constructs one JVM literal per
-    element (~3 round trips each, ~0.7 ms per trip at plan-authoring time);
-    rendering the whole table into a single SQL string crosses the gateway
-    once regardless of size. The resulting literal is foldable — identical
-    Catalyst plan either way.
+def const(value) -> "Column":  # noqa: F821
+    """A Python constant as ONE ``F.expr`` round trip: the one way a lookup
+    table, pass map, boundary array or hyperplane enters a plan. Takes
+    ``str``, ``bool``, ``int``, finite ``float`` (``repr`` + ``D``:
+    bit-exact), ``list``/``tuple`` (array) and ``dict`` (map), nested, with
+    ``F.lit``'s value and Spark type (``F.create_map``'s for a dict); NaN,
+    inf and other types raise. Per-element ``F.lit`` costs ~2 py4j round
+    trips per element per plan.
     """
     from pyspark.sql import functions as F
 
-    return F.expr("array(" + ",".join(sql_str(s) for s in strings) + ")")
+    def sql(v) -> str:
+        if isinstance(v, str):  # ``$`` escaped: the SQL parser substitutes ``${var}``
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024") + "'"
+        if isinstance(v, bool):
+            return "true" if v else "false"
+        if isinstance(v, int) and -(2**63) <= v < 2**63:
+            return str(v)
+        if isinstance(v, float) and math.isfinite(v):
+            return float.__repr__(v) + "D"
+        if isinstance(v, (list, tuple)):
+            return "array(" + ",".join(map(sql, v)) + ")"
+        if isinstance(v, dict):
+            return "map(" + ",".join(sql(x) for kv in v.items() for x in kv) + ")"
+        raise ValueError(f"const: no Spark SQL literal for {v!r}")
+
+    return F.expr(sql(value))
 
 
 def contains_any_expr(col, needles):
-    """``col`` contains any of ``needles`` — as ONE array literal + exists().
-
-    An N-term ``col.contains(a) | col.contains(b) | ...`` chain costs ~3 py4j
-    round trips per needle at plan-authoring time and builds an N-deep
-    Catalyst Or-tree; the array-literal form is a single round trip and a
-    shallow tree regardless of needle count, with identical evaluation
-    semantics (exists() over a foldable array literal stays inside
-    whole-stage codegen).
+    """``col`` contains any of ``needles``: one ``const`` array + exists()
+    instead of an N-deep ``col.contains(a) | ...`` Or-tree, with identical
+    semantics (exists() over a foldable array stays in whole-stage codegen).
     """
     from pyspark.sql import functions as F
 
-    return F.exists(sql_str_array(sorted(needles)), lambda n: col.contains(n))
+    return F.exists(const(sorted(needles)), lambda n: col.contains(n))

@@ -133,10 +133,8 @@ def explode_turns(conversations: DataFrame) -> DataFrame:
 def _country_normalize(col):
     """F1 normalizeCountry (CountryCodeValidator.java:93-107), native columns."""
     up = F.upper(F.trim(col))
-    name_map = F.create_map(
-        *[F.lit(x) for kv in L.COUNTRY_NAME_TO_CODE.items() for x in kv]
-    )
-    iso = (F.length(up) == 2) & up.isin(*sorted(L.ISO_COUNTRY_CODES))
+    name_map = L.const(L.COUNTRY_NAME_TO_CODE)
+    iso = (F.length(up) == 2) & F.array_contains(L.const(sorted(L.ISO_COUNTRY_CODES)), up)
     return F.when(col.isNull(), F.lit(None)).otherwise(
         F.when(iso, up).otherwise(F.coalesce(name_map[up], up))
     )
@@ -209,7 +207,7 @@ def extract_fields(df: DataFrame, text_col: str, prefix: str = "",
     tc = F.col(f"{p}_clean_text")
 
     mei_raw = F.upper(_x(tc, MEI_RE))
-    mei_cc_ok = F.substring(mei_raw, 1, 2).isin(*sorted(L.ISO_COUNTRY_CODES))
+    mei_cc_ok = F.array_contains(L.const(sorted(L.ISO_COUNTRY_CODES)), F.substring(mei_raw, 1, 2))
     ein_raw = _x(tc, EIN_RE)
     ein = F.when(
         ein_raw.contains("-"), ein_raw
@@ -315,7 +313,9 @@ def detect_entity_type(
         & ~name_l.contains("management"),
         F.lit(0.65),
     )
-    s_dom_known = F.when(dom.isin(*sorted(L.KNOWN_FUND_MANAGER_DOMAINS)), F.lit(0.85))
+    s_dom_known = F.when(
+        F.array_contains(L.const(sorted(L.KNOWN_FUND_MANAGER_DOMAINS)), dom), F.lit(0.85)
+    )
     s_dom_pat = F.when(
         contains_any(dom, ["asset", "capital", "invest", "fund", "wealth", "advisory"]),
         F.lit(0.7),

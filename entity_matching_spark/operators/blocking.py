@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window, WindowSpec
 
 from ..config import DEFAULT_CONFIG, MatchConfig
+from ..functions.lookups import const
 
 # Hard cap on the sorted-neighborhood boundary sample pulled to the driver
 # (operators/blocking.sorted_neighborhood_keys step 1): bounds driver memory
@@ -65,11 +66,8 @@ def _key(pass_name: str, col) -> F.Column:
 
 
 def _pass_map(field: int) -> F.Column:
-    """``BLOCKING_PASSES`` as one map literal: pass -> rank (``field=0``) or
-    strategy tag (``field=1``)."""
-    return F.create_map(
-        *[F.lit(x) for name, row in BLOCKING_PASSES.items() for x in (name, row[field])]
-    )
+    """``BLOCKING_PASSES`` as one map: pass -> rank (0) or strategy tag (1)."""
+    return const({name: row[field] for name, row in BLOCKING_PASSES.items()})
 
 
 def _capped(keys: DataFrame, cap: int) -> tuple[DataFrame, DataFrame]:
@@ -220,31 +218,23 @@ def sorted_neighborhood_keys(records: DataFrame, config: MatchConfig | None = No
     step = max(1, len(svals) // n_parts)
     bounds = sorted(set(svals[step::step]))  # interior boundaries only
 
-    # Single array-Literal node (NOT one F.lit per boundary): thousands of
-    # ranges would otherwise balloon the Catalyst expression tree; a list
-    # literal is one node regardless of length.
-    bounds_arr = F.lit(bounds).cast("array<string>")
+    # one const() array: thousands of ranges cost one py4j round trip, and
+    # the optimizer folds the array to a single Literal
+    bounds_arr = const(bounds).cast("array<string>")
     rid = F.size(F.filter(bounds_arr, lambda b: b <= F.col("snk")))
     sk = sk.withColumn("rid", rid)
     win = Window.partitionBy("rid").orderBy("snk", "conv_id")
     sk = sk.withColumn("lidx", F.row_number().over(win))
 
-    # per-range counts -> cumulative offsets. The collect is bounded by the
-    # number of ranges (<= len(bounds)+1 <= target_sample); the lookup map is
-    # two array Literals (same single-node discipline as bounds_arr).
+    # per-range counts -> cumulative offsets; the collect is bounded by the
+    # number of ranges (<= len(bounds)+1 <= target_sample). bigint offsets:
+    # int ``gidx`` arithmetic overflows under ANSI once a range straddles 2^31
     counts = {r["rid"]: r["cnt"] for r in sk.groupBy("rid").agg(F.count("*").alias("cnt")).collect()}
     offsets, acc = {}, 0
     for r in sorted(counts):
         offsets[r] = acc
         acc += counts[r]
-    offset_map = (
-        F.map_from_arrays(
-            F.lit([int(r) for r in sorted(offsets)]),
-            F.lit([int(offsets[r]) for r in sorted(offsets)]),
-        )
-        if offsets
-        else F.map_from_arrays(F.lit([]).cast("array<int>"), F.lit([]).cast("array<bigint>"))
-    )
+    offset_map = const(offsets).cast("map<int,bigint>")
 
     gidx = (offset_map[F.col("rid")] + F.col("lidx") - 1).alias("gidx")
     sk = sk.select("conv_id", gidx)

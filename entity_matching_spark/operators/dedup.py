@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.lookups import const
+
 
 def _tokens(docs: DataFrame, id_col: str, text_col: str, extra: list[str]) -> DataFrame:
     return docs.select(
@@ -328,7 +330,7 @@ def embedding_lsh_pairs(
     emb = F.col(emb_col).cast("array<double>")
 
     def bit(p: int) -> F.Column:
-        hp = F.array(*[F.lit(v) for v in planes[p]])
+        hp = const(planes[p])
         dot = F.aggregate(
             F.zip_with(emb, hp, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
         )

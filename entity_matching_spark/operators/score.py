@@ -415,7 +415,7 @@ def score_pairs(
     # email-strategy candidates are created after and never boosted
     from ..functions.lookups import (
         CORPORATE_DOMAINS, TLD_COUNTRY, FINANCIAL_KEYWORDS,
-        contains_any_expr, sql_str,
+        const, contains_any_expr,
     )
 
     dom = F.col("email_domain_a")
@@ -427,34 +427,16 @@ def score_pairs(
 
     # corporate-family lookup as ONE map + exists() instead of a ~120-term OR
     # chain — keeps the Catalyst expression tree shallow (deep chains overflow
-    # the analyzer's recursion at plan time) and the whole check codegen-able.
-    # the whole constant table crosses py4j in ONE F.expr round trip instead
-    # of ~3 per entry (driver plan-authoring cost); the literal is foldable,
-    # so the Catalyst plan is identical to the per-element form
-    _domains = sorted(CORPORATE_DOMAINS)
-    corp_map = F.expr(
-        "map_from_arrays(array("
-        + ",".join(sql_str(d) for d in _domains)
-        + "), array("
-        + ",".join(
-            "array(" + ",".join(sql_str(n) for n in CORPORATE_DOMAINS[d]) + ")"
-            for d in _domains
-        )
-        + "))"
-    )
+    # the analyzer's recursion at plan time) and the whole check codegen-able
+    corp_map = const(CORPORATE_DOMAINS)
     corp = F.exists(
         F.coalesce(corp_map[dom], F.array().cast("array<string>")),
         lambda nm: name_b_l.contains(nm) | fm_b_l.contains(nm),
     )
 
-    # (tld, country) pairs as one nested array literal + exists(): one py4j
-    # round trip for the whole table instead of 3 per TLD
+    # (tld, country) pairs as one nested array literal + exists()
     geo_tld = F.exists(
-        F.expr(
-            "array("
-            + ",".join(f"array({sql_str(t)},{sql_str(c)})" for t, c in TLD_COUNTRY)
-            + ")"
-        ),
+        const(TLD_COUNTRY),
         lambda p: dom.endswith(F.element_at(p, 1))
         & (F.col("country_code_b") == F.element_at(p, 2)),
     )
@@ -611,7 +593,7 @@ def score_pairs(
     df = df.withColumn("discrepancies", F.array_compact(F.array(*discs)))
 
     # --- penalty (ConfidenceScorer.java:44-46,130-139; quirk Q1) -------------
-    sev_map = F.create_map(*[F.lit(x) for kv in SEVERITY_PENALTY.items() for x in kv])
+    sev_map = const(SEVERITY_PENALTY)
     sign = 1.0 if cfg.penalty_inverted else -1.0
     pen_sum = F.aggregate(
         "discrepancies", F.lit(0.0), lambda acc, d: acc + sign * sev_map[d["severity"]]

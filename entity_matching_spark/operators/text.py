@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.lookups import const
+
 STOPWORDS = ("the", "a", "and", "of", "in", "to", "is", "on", "for", "with")
 
 LANG_MARKERS = {
@@ -57,7 +59,7 @@ def quality_columns(text_col: str = "text", stopwords: tuple = STOPWORDS) -> dic
     projection instead of joining a separate quality DataFrame."""
     toks = F.filter(F.split(text_col, " "), lambda t: t != "")
     n_tok = F.size(toks)
-    stop_arr = F.array(*[F.lit(s) for s in stopwords])
+    stop_arr = const(stopwords)
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
     n_punct = F.length(text_col) - F.length(F.regexp_replace(text_col, r"[^\w\s]", ""))
     len_score = F.least(F.length(text_col) / 500.0, F.lit(1.0))
@@ -315,7 +317,7 @@ def language_id(
     toks = F.filter(F.split(F.lower(text_col), " "), lambda t: t != "")
     scores = []
     for lang, words in sorted(markers.items()):
-        arr = F.array(*[F.lit(m) for m in words])
+        arr = const(words)
         scores.append(
             F.struct(
                 F.size(F.filter(toks, lambda t: F.array_contains(arr, t))).alias("hits"),

@@ -38,6 +38,7 @@ import logging
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..config import DEFAULT_CONFIG, MatchConfig
 from ..plans.checkpoint import _fs, _fs_exists, _fs_read_text, _fs_write_text_atomic
@@ -465,6 +466,7 @@ def _read_corpus_table(
     table: str,
     exclude_batch: int,
     prune_by: DataFrame | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame | None:
     """Corpus-side read for incremental_match: the compacted table (bucket-
     PRUNED to the buckets ``prune_by``'s probe keys hash into — a bounded
@@ -473,7 +475,16 @@ def _read_corpus_table(
     pruning is lossless for the downstream equi-/semi-joins: a bucket holds
     EVERY corpus row whose key hashes into it, so rows outside the collected
     buckets could never have joined. Returns None when no corpus exists yet.
+    ``schema``, that of the frame a batch writes to ``table``, spares the
+    reads their schema-inference job (partition columns read as ``int``).
     """
+
+    def read(path: str, part_col: str | None) -> DataFrame:
+        if schema is None:
+            return spark.read.parquet(path)
+        part = [StructField(part_col, IntegerType())] if part_col else []
+        return spark.read.schema(StructType(schema.fields + part)).parquet(path)
+
     raw = f"{work_dir}/{table}"
     comp_base = f"{work_dir}/{table}_compacted"
     man = _compaction_manifest(spark, comp_base)
@@ -482,11 +493,11 @@ def _read_corpus_table(
         if not raw_exists:
             return None
         return (
-            spark.read.parquet(raw)
+            read(raw, "batch_id")
             .where(F.col("batch_id") != exclude_batch)
             .drop("batch_id")
         )
-    comp = spark.read.parquet(f"{comp_base}/h={man['h']}")
+    comp = read(f"{comp_base}/h={man['h']}", "bucket" if "n_buckets" in man else None)
     if prune_by is not None and "n_buckets" in man:
         buckets = [
             r[0]
@@ -495,11 +506,10 @@ def _read_corpus_table(
             ).distinct().collect()
         ]
         comp = comp.where(F.col("bucket").isin(buckets))
-    if "bucket" in comp.columns:
-        comp = comp.drop("bucket")
+    comp = comp.drop("bucket")  # a no-op on the unbucketed key_counts
     if raw_exists:
         recent = (
-            spark.read.parquet(raw)
+            read(raw, "batch_id")
             .where((F.col("batch_id") > man["h"]) & (F.col("batch_id") != exclude_batch))
             .drop("batch_id")
         )
@@ -623,7 +633,8 @@ def incremental_match(
         # — O(corpus/n_buckets × touched buckets), not O(corpus) — and the
         # raw path (exclude any replayed copy of THIS batch) before then
         corpus_keys = _read_corpus_table(
-            spark, work_dir, "keys", batch_id, prune_by=batch_keys.select("key")
+            spark, work_dir, "keys", batch_id, prune_by=batch_keys.select("key"),
+            schema=batch_keys.schema,
         )
         if corpus_keys is not None:
             cross, _dropped2 = generate_cross_pairs(batch_keys, corpus_keys, cfg)
@@ -641,7 +652,8 @@ def incremental_match(
         )
         sides = batch_records.select(*SIDE_COLS)
         corpus_sides = _read_corpus_table(
-            spark, work_dir, "records", batch_id, prune_by=participants
+            spark, work_dir, "records", batch_id, prune_by=participants,
+            schema=batch_records.schema,
         )
         if corpus_sides is not None:
             sides = sides.unionByName(corpus_sides.select(*SIDE_COLS))
@@ -652,7 +664,9 @@ def incremental_match(
         # path's count-over-all-records, O(distinct keys) per batch; after
         # compaction the prior side is pre-summed to one row per key
         counts = batch_counts
-        prior = _read_corpus_table(spark, work_dir, "key_counts", batch_id)
+        prior = _read_corpus_table(
+            spark, work_dir, "key_counts", batch_id, schema=batch_counts.schema
+        )
         if prior is not None:
             counts = (
                 counts.unionByName(prior.select("clean_name_key", "n"))

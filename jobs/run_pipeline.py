@@ -88,15 +88,14 @@ def main(argv=None) -> int:
         resume=not args.no_resume,
         audit_lineage=args.audit_lineage,
     )
-    n_clusters = result.clusters.select("cluster_id").distinct().count()
-    n_records = result.records.count()
-    n_pairs = result.scored.count()
+    # row counts come from the stage manifests; only the cluster count scans
+    rows = {m["stage"]: m["output_rows"] for m in result.metrics}
     summary = {
-        "records": n_records,
-        "scored_pairs": n_pairs,
-        "clusters": n_clusters,
-        "dropped_hot_keys": result.dropped_keys.count(),
-        "dropped_fuzzy_candidates": result.dropped_candidates.count(),
+        "records": rows["s1_records"] - rows["s1_quarantine"],
+        "scored_pairs": rows["s4_scored"],
+        "clusters": result.clusters.select("cluster_id").distinct().count(),
+        "dropped_hot_keys": rows["s2_dropped_keys"],
+        "dropped_fuzzy_candidates": rows["s3_dropped_candidates"],
         "wall_sec": round(time.time() - t0, 2),
         "stages": [
             {k: m[k] for k in ("stage", "output_rows", "wall_ms")} for m in result.metrics
@@ -122,7 +121,7 @@ def main(argv=None) -> int:
         summary["profile"] = {
             "documents": kept["docs"],
             "kept": kept["kept"],
-            "vocab_rows": prof["vocab"].count(),
+            "vocab_rows": {m["stage"]: m["output_rows"] for m in prof["metrics"]}["p2_vocab"],
             "stages": [
                 {k: m[k] for k in ("stage", "output_rows", "wall_ms")}
                 for m in prof["metrics"]

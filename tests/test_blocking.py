@@ -120,9 +120,10 @@ class TestSortedNeighborhood:
     def test_cluster_scale_partition_config_is_bounded(self, spark, records_df):
         """A cluster-scale ``shuffle_partitions`` (thousands) must not blow up
         the SN driver structures: the boundary sample is hard-capped
-        (SN_MAX_SAMPLE) and the bounds/offset lookups are single Literal
-        nodes, so the plan builds and the pass still emits exactly two tile
-        keys per named record with every neighbor-pair sharing a tile."""
+        (SN_MAX_SAMPLE) and the bounds/offset lookups each enter the plan as
+        one ``const()`` SQL literal (folded to a single Literal), so the plan
+        builds and the pass still emits exactly two tile keys per named
+        record with every neighbor-pair sharing a tile."""
         from entity_matching_spark.operators.blocking import SN_MAX_SAMPLE
 
         cfg = MatchConfig(sorted_neighborhood_window=4, shuffle_partitions=4096)

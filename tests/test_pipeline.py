@@ -361,7 +361,8 @@ class TestProfileStages:
 
     def test_profile_cli_flag(self, spark, tmp_path):
         """jobs/run_pipeline.py --profile emits the profile summary block and
-        the stage manifests under <out>/profile."""
+        the stage manifests under <out>/profile; the summary's row counts,
+        taken from the manifests, equal count() over the stages read back."""
         import json
         import os
         import sys
@@ -382,6 +383,17 @@ class TestProfileStages:
             "p1_documents", "p2_vocab", "p3_curation", "p4_packing"
         }
         assert os.path.exists(os.path.join(out, "profile", "p3_curation_manifest.json"))
+
+        from entity_matching_spark.plans.checkpoint import StageCheckpointer
+
+        def n(work_dir, stage):
+            return StageCheckpointer(work_dir).read(spark, stage).count()
+
+        assert summary["records"] == n(out, "s1_records") - n(out, "s1_quarantine")
+        assert summary["scored_pairs"] == n(out, "s4_scored")
+        assert summary["dropped_hot_keys"] == n(out, "s2_dropped_keys")
+        assert summary["dropped_fuzzy_candidates"] == n(out, "s3_dropped_candidates")
+        assert summary["profile"]["vocab_rows"] == n(os.path.join(out, "profile"), "p2_vocab")
 
     def test_audit_lineage_cli_flag(self, spark, tmp_path):
         """--audit-lineage runs every stage through the re-read cross-check

@@ -11,7 +11,10 @@ identity to separate host noise from code regressions; this test makes the
 check automatic.)
 """
 
+import math
 import re
+import struct
+from contextlib import contextmanager
 
 import pytest
 
@@ -194,3 +197,98 @@ class TestScanPruning:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "PushedFilters: [IsNotNull(vec_id), LessThan(vec_id,20)]" in plan
         assert re.search(r"ReadSchema: struct<vec_id:bigint,a:string>", plan)
+
+
+@contextmanager
+def _py4j_commands(spark):
+    """Count the driver's Py4J gateway commands, memory releases (``m``)
+    excluded: their timing follows Python garbage collection, everything
+    else is a deterministic function of the plan being authored."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, n = client.send_command, [0]
+
+    def counting(command, *args, **kwargs):
+        n[0] += not command.startswith("m")
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield n
+    finally:
+        del client.send_command
+
+
+class TestAuthoringCost:
+    def test_authoring_py4j_ceiling(self, spark, transcripts_df):
+        """Plan constants cross the gateway once per table (``const``), not
+        once per element: authoring S1 stays under a fixed command ceiling,
+        and the sign-LSH plan does not grow with the hyperplane width."""
+        from entity_matching_spark.operators.assemble import build_records
+        from entity_matching_spark.operators.dedup import embedding_lsh_pairs
+
+        with _py4j_commands(spark) as n:
+            build_records(transcripts_df)
+        assert n[0] <= 3000, f"build_records authoring took {n[0]} Py4J commands"
+
+        counts = {}
+        for dim in (64, 1024):
+            vecs = spark.createDataFrame([], "vec_id int, embedding array<double>")
+            with _py4j_commands(spark) as n:
+                embedding_lsh_pairs(vecs, n_planes=4, rows_per_band=2, dim=dim)
+            counts[dim] = n[0]
+        assert counts[1024] <= 1.05 * counts[64], counts
+
+
+class TestConst:
+    def test_const_matches_lit(self, spark):
+        """``const(v)`` is ``F.lit(v)`` (``create_map`` of lits for a dict) in
+        value and Spark type, one SQL literal, for the edge cases of each
+        rendered type; NaN, inf and unsupported types raise."""
+        from pyspark.sql import functions as F
+
+        from entity_matching_spark.functions.lookups import const
+
+        def lit_map(d):
+            return F.create_map(*[F.lit(x) for kv in d.items() for x in kv])
+
+        strings = ["it's", "back\\slash\\", "new\nline", "Société Générale ☃",
+                   "${spark.app.name}", "tab\t\\u0041%_", ""]
+        ints = [0, 2**31 - 1, 2**31, -(2**31), -(2**31) - 1, 2**63 - 1, -(2**63)]
+        doubles = [0.85, 1e-05, 5e-324, 1.7976931348623157e308, -0.0, 0.1 + 0.2]
+        cases = (
+            [(v, F.lit(v)) for v in strings + ints + doubles + [True, False]]
+            + [
+                (strings, F.lit(strings)),
+                (ints, F.lit(ints)),
+                (doubles, F.lit(doubles)),
+                ([[1, 2], [3]], F.lit([[1, 2], [3]])),
+                ([("a", "b"), ("c", "d")], F.lit([["a", "b"], ["c", "d"]])),
+                ({"x": -25.0, "y'": 0.5}, lit_map({"x": -25.0, "y'": 0.5})),
+                ({"d": ["a", "b"], "e": ["c"]}, F.create_map(
+                    F.lit("d"), F.lit(["a", "b"]), F.lit("e"), F.lit(["c"]))),
+                ({1: 0, 2: 2**40}, lit_map({1: 0, 2: 2**40})),
+            ]
+        )
+        df = spark.range(1).select(
+            *[c.alias(f"c{i}") for i, (v, _) in enumerate(cases) for c in [const(v)]],
+            *[ref.alias(f"r{i}") for i, (_, ref) in enumerate(cases)],
+        )
+        row = df.first()
+
+        def bits(x):
+            # doubles compare bit for bit (-0.0 == 0.0 otherwise)
+            if isinstance(x, float):
+                return struct.pack(">d", x)
+            if isinstance(x, list):
+                return [bits(y) for y in x]
+            if isinstance(x, dict):
+                return {k: bits(y) for k, y in x.items()}
+            return x
+
+        for i, (v, _) in enumerate(cases):
+            got, want = df.schema[f"c{i}"].dataType, df.schema[f"r{i}"].dataType
+            assert got == want, (v, got, want)
+            assert bits(row[f"c{i}"]) == bits(row[f"r{i}"]), (v, row[f"c{i}"], row[f"r{i}"])
+        for bad in (math.nan, math.inf, -math.inf, [1.0, math.nan], {"a"}, 2**63):
+            with pytest.raises((TypeError, ValueError)):
+                const(bad)

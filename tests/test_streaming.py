@@ -590,6 +590,43 @@ class TestCorpusCompaction:
                   for d in r["discrepancies"]}
         assert "POTENTIAL_DUPLICATE_SHORT_NAME" in dflags
 
+    def test_corpus_reads_with_batch_schema_run_no_job(self, spark, tmp_path):
+        """Given the schema of the frame a batch writes, a raw corpus read and
+        a compacted one (bucketed ``keys``, unbucketed ``key_counts``) run
+        no Spark job, and return the rows and schema of an inferring read."""
+        from entity_matching_spark.streaming.ingest import _read_corpus_table, compact_corpus
+
+        sc = spark.sparkContext
+        wd = str(tmp_path / "swork")
+        frames = {
+            "keys": spark.createDataFrame(
+                [("c1", "mei", "mei:X1"), ("c2", "lei", "lei:Y2")],
+                "conv_id string, pass string, key string"),
+            "key_counts": spark.createDataFrame(
+                [("acme", 2)], "clean_name_key string, n bigint"),
+        }
+        for table, df in frames.items():
+            for b in (0, 1):
+                df.write.parquet(f"{wd}/{table}/batch_id={b}")
+
+        def check(table):
+            group = f"corpus-read-{table}"
+            prev = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(group, "corpus read")
+            try:
+                pinned = _read_corpus_table(spark, wd, table, 1, schema=frames[table].schema)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", prev)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], table
+            inferred = _read_corpus_table(spark, wd, table, 1)
+            assert pinned.schema == inferred.schema, (pinned.schema, inferred.schema)
+            assert sorted(pinned.collect()) == sorted(inferred.collect())
+            return pinned.count()
+
+        assert check("keys") == 2 and check("key_counts") == 1  # raw: batch 0 only
+        compact_corpus(spark, wd, n_buckets=4)
+        assert check("keys") == 4 and check("key_counts") == 1  # compacted: both
+
 
 class TestCompactCorpusCLI:
     def test_cli_compacts_and_reports(self, spark, tmp_path):
