@@ -705,7 +705,7 @@ def _sql_dedup_exact(sf: str) -> str:
 # affects only candidate recall, never the reported similarity. Pairs whose
 # every shared token is over-cap are the only losses — at threshold 0.5 those
 # are stopword-soup pairs, not near-duplicates. The same discipline as
-# operators/blocking._capped (max_block_size + reporting).
+# operators/blocking.cap_groups (max_block_size + reporting).
 _TOKEN_DF_CAP = 50
 
 

@@ -10,9 +10,11 @@ union of key passes instead of per-probe point queries.
 Scale design (SURVEY.md §4.3.1 — explicit, not left to Catalyst):
 
 - **Key-frequency cap.** Keys whose group exceeds ``config.max_block_size``
-  are dropped from pair generation and surfaced via ``profile_block_keys`` —
-  the set-oriented analog of the reference's ``LIMIT 100``
-  (sql/findByName.sql:10). Dropped keys are returned, never silently ignored.
+  are dropped from pair generation by ``cap_groups`` — the set-oriented
+  analog of the reference's ``LIMIT 100`` (sql/findByName.sql:10). Dropped
+  keys are returned, never silently ignored. ``cap_groups`` and
+  ``self_pairs`` (the ``a < b`` group self-join) are also the candidate core
+  of the dedup operators (operators/dedup.py) and ``cluster.cluster_pairs``.
 - **One self-join for small and hot groups.** Every kept key row gets a
   bucket ``b`` and is replicated over the bucket pairs that contain it; the
   self-join key is ``(key, i, j)``. Groups larger than
@@ -60,6 +62,12 @@ BLOCKING_PASSES = {
     "email_domain": (8, "EMAIL_DOMAIN"),  # sql/findByEmailDomain.sql
 }
 
+# The exact-key passes: a pair sharing one of these keys is a J1/J2 duplicate
+# (identifier equality, cleaned-short-name equality;
+# engine/DuplicateDetector.java:32-84), read by score.duplicate_flags and the
+# pipeline's duplicate-edge union.
+DUPLICATE_KEY_PASSES = ("mei", "lei", "ein", "cleanname")
+
 
 def _key(pass_name: str, col) -> F.Column:
     return F.concat(F.lit(pass_name + ":"), col)
@@ -70,10 +78,14 @@ def _pass_map(field: int) -> F.Column:
     return const({name: row[field] for name, row in BLOCKING_PASSES.items()})
 
 
-def _capped(keys: DataFrame, cap: int) -> tuple[DataFrame, DataFrame]:
-    """Key-frequency cap: ``(kept, dropped)`` — the key rows of groups of at
-    most ``cap`` records, each with its group size ``n``, and the over-cap
-    (key, n) profile.
+def cap_groups(
+    rows: DataFrame, on: list[str], cap: int | None, n: str = "n"
+) -> tuple[DataFrame, DataFrame]:
+    """Group-size cap, the set-oriented ``LIMIT 100`` (sql/findByName.sql:10)
+    of every candidate join: ``(kept, dropped)`` — the rows of groups (rows
+    sharing every ``on`` column) of at most ``cap`` rows, each carrying its
+    group size ``n``, and the over-cap ``(*on, n)`` profile, reported rather
+    than silently discarded. ``cap=None`` keeps every group.
 
     Group sizes via groupBy + shuffle join. Deliberately NO broadcast hint:
     the distinct-key table scales with the data (every name token is a key),
@@ -81,8 +93,18 @@ def _capped(keys: DataFrame, cap: int) -> tuple[DataFrame, DataFrame]:
     size; AQE still auto-broadcasts when the counts side is genuinely small.
     A count-window alternative would buffer whole hot-key partitions.
     """
-    counts = keys.groupBy("key").agg(F.count("*").alias("n"))
-    return keys.join(counts.where(F.col("n") <= cap), "key"), counts.where(F.col("n") > cap)
+    counts = rows.groupBy(*on).agg(F.count("*").alias(n))
+    over = F.lit(False) if cap is None else F.col(n) > cap
+    return rows.join(counts.where(~over), on), counts.where(over)
+
+
+def self_pairs(rows: DataFrame, on: list[str], first: str) -> DataFrame:
+    """Each pair of ``rows`` sharing every ``on`` column, once, with
+    ``{first}_a < {first}_b``; every other column ``c`` comes out as ``c_a``
+    and ``c_b``. The candidate self-join of every capped group."""
+    rest = [c for c in rows.columns if c not in on]
+    a, b = (rows.select(*on, *[F.col(c).alias(f"{c}_{s}") for c in rest]) for s in "ab")
+    return a.join(b, on).where(F.col(f"{first}_a") < F.col(f"{first}_b"))
 
 
 def _best_pass(raw: DataFrame) -> DataFrame:
@@ -267,7 +289,7 @@ def generate_cross_pairs(
     highest-precedence pass — same contract as ``generate_pairs``.
     """
     cfg = config or DEFAULT_CONFIG
-    ok, dropped = _capped(corpus_keys, cfg.max_block_size)
+    ok, dropped = cap_groups(corpus_keys, ["key"], cfg.max_block_size)
     a = probe_keys.select("key", F.col("conv_id").alias("conv_id_a"), "pass")
     b = ok.select("key", F.col("conv_id").alias("conv_id_b"))
     raw = a.join(b, "key").where(F.col("conv_id_a") != F.col("conv_id_b"))
@@ -371,7 +393,7 @@ def generate_pairs(
     """
     cfg = config or DEFAULT_CONFIG
     B = max(2, cfg.salt_buckets)
-    kept, dropped = _capped(keys, cfg.max_block_size)
+    kept, dropped = cap_groups(keys, ["key"], cfg.max_block_size)
 
     # one self-join on (key, i, j) for every group (see module docstring):
     # hot rows fan out over the B bucket pairs holding their bucket, small

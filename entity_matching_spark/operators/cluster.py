@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_CONFIG, MatchConfig
+from .blocking import self_pairs
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -112,10 +113,5 @@ def assign_clusters(records: DataFrame, components: DataFrame) -> DataFrame:
 def cluster_pairs(components: DataFrame) -> DataFrame:
     """Expand cluster labels to all intra-cluster pairs (a < b) — the
     pairwise view used for F1 evaluation against the label table."""
-    a = components.select("cluster_id", F.col("conv_id").alias("conv_id_a"))
-    b = components.select("cluster_id", F.col("conv_id").alias("conv_id_b"))
-    return (
-        a.join(b, "cluster_id")
-        .where(F.col("conv_id_a") < F.col("conv_id_b"))
+    return self_pairs(components.select("cluster_id", "conv_id"), ["cluster_id"], "conv_id") \
         .select("conv_id_a", "conv_id_b")
-    )

@@ -73,18 +73,9 @@ def pii_stats(
 
 def _word_ngrams(text_col: str, n: int) -> F.Column:
     """Distinct full-width word n-grams of ``text_col`` (empty array when the
-    document has fewer than n words) — same construction as the MinHash
-    shingles in operators/dedup.py, so gram semantics are shared corpus-wide."""
-    arr = F.filter(F.split(text_col, " "), lambda t: t != "")
-    return F.when(
-        F.size(arr) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(arr) - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(arr, i, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    document has fewer than n words). Unlike the MinHash shingles of
+    operators/dedup.py, a short document yields no gram, not one."""
+    return F.array_distinct(_word_ngrams_all(text_col, n))
 
 
 def contamination_scores(

@@ -1,32 +1,31 @@
 """Corpus deduplication operators (training-data pipeline family).
 
-Four scale-graded strategies over a document table ``(doc_id, text, ...)``:
+Every near-duplicate operator here has one shape: a candidate join, then an
+exact confirm. Candidates are the pairs sharing a key group (a token, an
+n-gram, an LSH band bucket, a k-gram hash, an IVF cell). The group-size cap
+is ``blocking.cap_groups``: groups over the cap are stopword-grade or
+boilerplate hot keys that add quadratic work and discriminate nothing, so
+they are excluded from the join and RETURNED as a dropped profile, never
+silently discarded. ``blocking.self_pairs`` pairs each group once
+(``a < b``). The confirm recomputes the similarity EXACTLY over the full
+token sets, shingle sets, vectors or texts, so a cap affects candidate
+recall only, never a reported score.
 
-- ``exact_duplicates``: md5 hash-groupBy — one shuffle on the hash, perfectly
-  partitionable; the always-first pass at any scale.
-- ``token_jaccard_pairs``: near-dup via inverted-index candidates + exact
-  Jaccard. The candidate self-join is DF-CAPPED: tokens present in more than
-  ``df_cap`` documents (per blocking column) are stopword-grade — they add
-  quadratic hot keys and no discrimination — so candidates must share at
-  least one sub-cap token. The Jaccard itself is then computed EXACTLY over
-  the full token sets (array_intersect), so the cap affects candidate recall
-  only, never the reported similarity; pairs whose every shared token is
-  over-cap are the only losses (stopword soup, not near-duplicates). Dropped
-  tokens are RETURNED, never silently discarded — the same discipline as
-  blocking.generate_pairs' max_block_size.
-- ``minhash_lsh_pairs``: MinHash signatures over word shingles, banded LSH —
-  the sub-quadratic path for corpus-vs-corpus near-dup at 100 TB. The
-  md5-derived hash family is engine-independent (DuckDB reproduces the exact
-  signatures in the driver oracle). The signature build shuffles token rows
-  ONCE through k parallel codegen min() aggregates (a zero-shuffle HOF fold
-  was measured slower — interpreted lambdas — and reverted, round 4).
-- ``simhash_signatures``: 60-bit SimHash per document via native bit
-  arithmetic — Hamming-distance bucketing for fuzzy near-dup, no Python.
-  60 bits (not 64) keeps the signature positive in a signed BIGINT so the
-  cross-engine DuckDB oracle reproduces it without unsigned-overflow games.
-
-Plus ``fingerprints``: winnowing-style document fingerprint (min hash over
-strided character windows) for container-level dedup and provenance.
+- exact: ``exact_duplicates`` (md5 hash-groupBy, the always-first pass).
+- set Jaccard: ``token_jaccard_pairs`` (words, blocked per source),
+  ``ngram_jaccard_pairs`` (character n-grams), ``minhash_lsh_pairs`` and
+  ``minhash_verified_pairs`` (banded MinHash over word shingles, the
+  sub-quadratic corpus-vs-corpus path; the md5-derived hash family is
+  engine-independent, so the DuckDB oracle reproduces exact signatures).
+- Hamming: ``simhash_signatures`` and ``simhash_near_dup_pairs`` (60-bit
+  SimHash, band-blocked), with ``simhash60_py`` the scalar streaming twin.
+- cosine: ``embedding_lsh_pairs`` (sign-LSH over ``rp_hyperplanes``) and
+  ``embedding_near_dup_pairs`` (IVF-cell blocking).
+- substrings: ``substring_duplicate_spans`` finds byte-identical spans
+  shared across documents; ``remove_duplicate_spans`` splices them out.
+- ``canonical_docs`` collapses any operator's pairs into clusters and keeps
+  one document per cluster; ``fingerprints`` is a winnowing-style document
+  fingerprint for container-level dedup and provenance.
 
 No reference analog (graft-brief requirement beyond fmateoc/entity-matching).
 """
@@ -36,12 +35,59 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.lookups import const
+from .blocking import cap_groups, self_pairs
 
 
 def _tokens(docs: DataFrame, id_col: str, text_col: str, extra: list[str]) -> DataFrame:
     return docs.select(
         id_col, *extra, F.explode(F.array_distinct(F.split(text_col, " "))).alias("tok")
     ).where(F.col("tok") != "")
+
+
+def _shingles(text_col: str, k: int) -> F.Column:
+    """Distinct ``k``-word shingles of ``text_col``. A doc shorter than k
+    words is one shingle; an empty or whitespace-only doc has none (its
+    ``''`` shingle would give every empty doc one signature, a mega-bucket
+    in every band; ``exact_duplicates`` already groups them)."""
+    arr = F.filter(F.split(text_col, " "), lambda t: t != "")
+    return F.filter(
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(F.size(arr) - (k - 1), F.lit(1))),
+                lambda i: F.concat_ws(" ", F.slice(arr, i, k)),
+            )
+        ),
+        lambda t: t != "",
+    )
+
+
+def _jaccard(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """Exact-Jaccard confirm: ``cand`` (doc_a, doc_b) pairs joined to both
+    docs' distinct sets ``sets`` (doc, arr) -> (doc_a, doc_b, jaccard), with
+    jaccard rounded to 9 places and >= ``threshold``."""
+    a, b = (
+        sets.select(F.col("doc").alias(f"doc_{s}"), F.col("arr").alias(f"arr_{s}")) for s in "ab"
+    )
+    inter = F.size(F.array_intersect("arr_a", "arr_b"))
+    jaccard = F.round(inter / (F.size("arr_a") + F.size("arr_b") - inter), 9)
+    return (
+        cand.join(a, "doc_a").join(b, "doc_b")
+        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _set_jaccard_pairs(
+    toks: DataFrame, on: list[str], df_cap: int, threshold: float
+) -> tuple[DataFrame, DataFrame]:
+    """The token and n-gram Jaccard core over distinct (doc, *on) rows whose
+    ``on`` ends in ``tok``: candidates share a group of at most ``df_cap``
+    docs, confirmed by exact Jaccard over each doc's full ``tok`` set.
+    Returns ``(pairs, dropped)``; dropped is the over-cap (*on, df)."""
+    kept, dropped = cap_groups(toks, on, df_cap, n="df")
+    cand = self_pairs(kept.select("doc", *on), on, "doc").select("doc_a", "doc_b").distinct()
+    sets = toks.groupBy("doc").agg(F.collect_set("tok").alias("arr"))
+    return _jaccard(cand, sets, threshold), dropped
 
 
 def exact_duplicates(
@@ -64,34 +110,16 @@ def token_jaccard_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """Near-duplicate pairs by token Jaccard.
 
+    Candidates share at least one token present in at most ``df_cap``
+    documents of their ``block_col`` value; pairs whose every shared token
+    is over-cap are the only losses (stopword soup, not near-duplicates).
+
     Returns ``(pairs, dropped_tokens)``: pairs is (doc_a, doc_b, jaccard >=
-    threshold); dropped_tokens is the over-cap token profile
-    (block, tok, df) the candidate join ignored.
+    threshold) with doc_a < doc_b; dropped_tokens is the over-cap token
+    profile (block, tok, df) the candidate join ignored.
     """
-    toks = _tokens(docs, id_col, text_col, [block_col])
-    # No broadcast hint on the df table: the vocabulary scales with the data;
-    # AQE broadcasts it when genuinely small.
-    dfreq = toks.groupBy(block_col, "tok").agg(F.count("*").alias("df"))
-    dropped = dfreq.where(F.col("df") > df_cap)
-    rare = toks.join(dfreq.where(F.col("df") <= df_cap), [block_col, "tok"])
-    a = rare.select(F.col(id_col).alias("doc_a"), block_col, "tok")
-    b = rare.select(F.col(id_col).alias("doc_b"), block_col, "tok")
-    cand = (
-        a.join(b, [block_col, "tok"]).where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-    )
-    sets = toks.groupBy(id_col).agg(F.sort_array(F.collect_set("tok")).alias("arr"))
-    j = (
-        cand.join(sets.select(F.col(id_col).alias("doc_a"), F.col("arr").alias("arr_a")), "doc_a")
-        .join(sets.select(F.col(id_col).alias("doc_b"), F.col("arr").alias("arr_b")), "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("arr_a", "arr_b")))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.size("arr_a") + F.size("arr_b") - F.col("inter")), 9),
-        )
-    )
-    pairs = j.where(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
-    return pairs, dropped
+    toks = _tokens(docs, id_col, text_col, [block_col]).withColumnRenamed(id_col, "doc")
+    return _set_jaccard_pairs(toks, [block_col, "tok"], df_cap, threshold)
 
 
 def minhash_lsh_pairs(
@@ -109,26 +137,9 @@ def minhash_lsh_pairs(
     discriminative (single tokens share a tiny vocabulary and collide into
     useless mega-buckets). Output: (doc_a, doc_b, band), distinct.
     """
-    arr = F.filter(F.split(text_col, " "), lambda t: t != "")
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(arr) - (shingle - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(arr, i, shingle)),
-        )
+    toks = docs.select(
+        F.col(id_col).alias("doc"), F.explode(_shingles(text_col, shingle)).alias("tok")
     )
-    # empty/whitespace-only docs yield a single '' shingle (concat_ws over an
-    # empty slice); unfiltered they'd all share one signature and collide into
-    # a mega-bucket in every band -> quadratic spurious candidates. Dropping
-    # '' here excludes empty docs from LSH entirely (exact_duplicates already
-    # groups them).
-    #
-    # The signature build is a ZERO-shuffle per-row fold (round 4): each
-    # minhash is array_min over the doc's own shingle array — identical bytes
-    # to the earlier explode + k-parallel-min groupBy (min over a string set
-    # is order-free), with the corpus-wide (doc, shingle) shuffle removed
-    # entirely. The only shuffles left in the operator are the band-bucket
-    # self-join and the final distinct.
-    toks = docs.select(id_col, F.explode(shingles).alias("tok")).where(F.col("tok") != "")
     # all k minhashes as PARALLEL aggregate expressions over the (doc,
     # shingle) rows — one groupBy with k min() columns instead of exploding
     # k x rows through the shuffle. A per-row array_min fold was tried
@@ -137,7 +148,7 @@ def minhash_lsh_pairs(
     # this whole-stage-codegen explode, and losing the shuffle boundary made
     # the band join recompute the signatures per plan reference. One shuffle
     # of map-side-combined k-column partials per doc is the right trade.
-    sig = toks.groupBy(id_col).agg(*[
+    sig = toks.groupBy("doc").agg(*[
         F.min(
             F.substring(F.md5(F.concat(F.lit(f"{i}|"), F.col("tok"))), 1, 12)
         ).alias(f"mh{i}")
@@ -155,15 +166,10 @@ def minhash_lsh_pairs(
     bands_arr = F.array(*[
         F.struct(F.lit(b).alias("band"), bucket(b).alias("bucket")) for b in range(n_bands)
     ])
-    band = sig.select(id_col, F.explode(bands_arr).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    band = sig.select("doc", F.explode(bands_arr).alias("bb")).select(
+        "doc", "bb.band", "bb.bucket"
     )
-    a = band.select("band", "bucket", F.col(id_col).alias("doc_a"))
-    b = band.select("band", "bucket", F.col(id_col).alias("doc_b"))
-    return (
-        a.join(b, ["band", "bucket"]).where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "band").distinct()
-    )
+    return self_pairs(band, ["band", "bucket"], "doc").select("doc_a", "doc_b", "band").distinct()
 
 
 def minhash_verified_pairs(
@@ -192,26 +198,8 @@ def minhash_verified_pairs(
         docs, num_hashes=num_hashes, rows_per_band=rows_per_band,
         shingle=shingle, text_col=text_col, id_col=id_col,
     ).select("doc_a", "doc_b").distinct()
-    arr = F.filter(F.split(text_col, " "), lambda t: t != "")
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(arr) - (shingle - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(arr, i, shingle)),
-        )
-    )
-    sets = docs.select(
-        id_col, F.sort_array(F.filter(shingles, lambda t: t != "")).alias("arr")
-    )
-    j = (
-        cand.join(sets.select(F.col(id_col).alias("doc_a"), F.col("arr").alias("arr_a")), "doc_a")
-        .join(sets.select(F.col(id_col).alias("doc_b"), F.col("arr").alias("arr_b")), "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("arr_a", "arr_b")))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.size("arr_a") + F.size("arr_b") - F.col("inter")), 9),
-        )
-    )
-    return j.where(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
+    sets = docs.select(F.col(id_col).alias("doc"), _shingles(text_col, shingle).alias("arr"))
+    return _jaccard(cand, sets, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -227,12 +215,10 @@ def ngram_jaccard_pairs(
     The character-level sibling of ``token_jaccard_pairs`` — robust to
     whitespace/punctuation edits that shift token boundaries (the classic
     failure mode of word-token Jaccard on OCR'd or template-mangled text).
-    Same scale discipline: an inverted-index candidate join over n-grams
-    whose document frequency is <= ``df_cap`` (boilerplate grams shared by
-    everything add quadratic hot keys and no discrimination), then the EXACT
-    Jaccard over each candidate pair's full distinct-n-gram sets — the cap
-    affects candidate recall only, never the reported similarity. Over-cap
-    grams are RETURNED, never silently discarded.
+    Same candidate core: an inverted-index join over n-grams whose document
+    frequency is <= ``df_cap`` (boilerplate grams shared by everything add
+    quadratic hot keys and no discrimination), then the EXACT Jaccard over
+    each candidate pair's full distinct-n-gram sets.
 
     Returns ``(pairs, dropped_grams)``: pairs is (doc_a, doc_b, jaccard >=
     threshold) with doc_a < doc_b; dropped_grams is (tok, df) for over-cap
@@ -249,28 +235,8 @@ def ngram_jaccard_pairs(
             lambda g: F.length(g) == n,
         )
     )
-    toks = docs.select(id_col, F.explode(grams_expr).alias("tok"))
-    dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    dropped = dfreq.where(F.col("df") > df_cap)
-    rare = toks.join(dfreq.where(F.col("df") <= df_cap), "tok")
-    a = rare.select(F.col(id_col).alias("doc_a"), "tok")
-    b = rare.select(F.col(id_col).alias("doc_b"), "tok")
-    cand = (
-        a.join(b, "tok").where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-    )
-    sets = toks.groupBy(id_col).agg(F.sort_array(F.collect_set("tok")).alias("arr"))
-    j = (
-        cand.join(sets.select(F.col(id_col).alias("doc_a"), F.col("arr").alias("arr_a")), "doc_a")
-        .join(sets.select(F.col(id_col).alias("doc_b"), F.col("arr").alias("arr_b")), "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("arr_a", "arr_b")))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.size("arr_a") + F.size("arr_b") - F.col("inter")), 9),
-        )
-    )
-    pairs = j.where(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
-    return pairs, dropped
+    toks = docs.select(F.col(id_col).alias("doc"), F.explode(grams_expr).alias("tok"))
+    return _set_jaccard_pairs(toks, ["tok"], df_cap, threshold)
 
 
 def rp_hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
@@ -319,7 +285,7 @@ def embedding_lsh_pairs(
     The dot products run JVM-side (``zip_with`` + left-fold ``aggregate``
     against literal hyperplane arrays — model constants in the plan, zero
     per-row hashing); band buckets over ``bucket_cap`` docs are excluded
-    and RETURNED — same discipline as ``simhash_near_dup_pairs``.
+    and RETURNED (``cap_groups``; ``bucket_cap=None`` keeps every bucket).
 
     Returns ``(pairs, dropped_buckets)``: pairs is (vec_a, vec_b, cos) with
     vec_a < vec_b, cos >= threshold; dropped_buckets is (band, bkey, n_docs).
@@ -337,7 +303,7 @@ def embedding_lsh_pairs(
         return (dot > 0).cast("long")
 
     sig_col = sum((bit(p) * (1 << p) for p in range(n_planes)), F.lit(0))
-    sig = vectors.select(F.col(id_col).alias("vid"), emb.alias("emb"), sig_col.alias("sig"))
+    sig = vectors.select(F.col(id_col).alias("vec"), emb.alias("emb"), sig_col.alias("sig"))
     n_bands = n_planes // rows_per_band
     mask = (1 << rows_per_band) - 1
     bands = F.array(*[
@@ -347,30 +313,15 @@ def embedding_lsh_pairs(
         )
         for b in range(n_bands)
     ])
-    keyed = sig.select("vid", "emb", F.explode(bands).alias("bb")).select(
-        "vid", "emb", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
-    )
-    counts = keyed.groupBy("band", "bkey").agg(F.count("*").alias("n_docs"))
-    if bucket_cap is not None:
-        dropped = counts.where(F.col("n_docs") > bucket_cap)
-        keyed = keyed.join(
-            counts.where(F.col("n_docs") <= bucket_cap).select("band", "bkey"),
-            ["band", "bkey"],
-        )
-    else:
-        dropped = counts.where(F.lit(False))
-    a = keyed.select(F.col("vid").alias("vec_a"), "band", "bkey")
-    b = keyed.select(F.col("vid").alias("vec_b"), "band", "bkey")
+    keyed = sig.select("vec", F.explode(bands).alias("bb")).select("vec", "bb.band", "bb.bkey")
+    kept, dropped = cap_groups(keyed, ["band", "bkey"], bucket_cap, n="n_docs")
     # distinct on ids only — the dedup shuffle carries 2 longs per candidate,
     # not the 64-double embeddings, which join back in afterwards
-    cand = (
-        a.join(b, ["band", "bkey"]).where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b").distinct()
-    )
-    v = sig.select("vid", "emb")
+    cand = self_pairs(kept, ["band", "bkey"], "vec").select("vec_a", "vec_b").distinct()
+    v = sig.select("vec", "emb")
     pairs = (
-        cand.join(v.select(F.col("vid").alias("vec_a"), F.col("emb").alias("emb_a")), "vec_a")
-        .join(v.select(F.col("vid").alias("vec_b"), F.col("emb").alias("emb_b")), "vec_b")
+        cand.join(v.select(F.col("vec").alias("vec_a"), F.col("emb").alias("emb_a")), "vec_a")
+        .join(v.select(F.col("vec").alias("vec_b"), F.col("emb").alias("emb_b")), "vec_b")
         .select(
             "vec_a", "vec_b",
             F.round(cosine(F.col("emb_a"), F.col("emb_b")), 9).alias("cos"),
@@ -472,8 +423,7 @@ def simhash_near_dup_pairs(
     ``bucket_cap`` bounds the residual hot buckets (boilerplate-heavy
     corpora collapse many docs onto one signature prefix): band buckets
     holding more than ``bucket_cap`` docs are excluded from the candidate
-    join and RETURNED, never silently discarded — the same discipline as
-    blocking.generate_pairs' max_block_size and token_jaccard's df_cap.
+    join and RETURNED, never silently discarded (``cap_groups``).
     ``bucket_cap=None`` disables the cap (exact mode, used by the
     brute-force-equality test).
 
@@ -489,22 +439,12 @@ def simhash_near_dup_pairs(
         )
         for i in range(SIMHASH_BANDS)
     ])
-    keyed = sig.select(id_col, "simhash", F.explode(bands).alias("bb")).select(
-        id_col, "simhash", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
-    )
-    counts = keyed.groupBy("band", "bkey").agg(F.count("*").alias("n_docs"))
-    if bucket_cap is not None:
-        dropped = counts.where(F.col("n_docs") > bucket_cap)
-        keyed = keyed.join(
-            counts.where(F.col("n_docs") <= bucket_cap).select("band", "bkey"),
-            ["band", "bkey"],
-        )
-    else:
-        dropped = counts.where(F.lit(False))
-    a = keyed.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("sig_a"), "band", "bkey")
-    b = keyed.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("sig_b"), "band", "bkey")
+    keyed = sig.select(
+        F.col(id_col).alias("doc"), F.col("simhash").alias("sig"), F.explode(bands).alias("bb")
+    ).select("doc", "sig", "bb.band", "bb.bkey")
+    kept, dropped = cap_groups(keyed, ["band", "bkey"], bucket_cap, n="n_docs")
     cand = (
-        a.join(b, ["band", "bkey"]).where(F.col("doc_a") < F.col("doc_b"))
+        self_pairs(kept, ["band", "bkey"], "doc")
         .select("doc_a", "doc_b", "sig_a", "sig_b").distinct()
     )
     ham = F.bit_count(F.expr("sig_a ^ sig_b"))
@@ -538,13 +478,11 @@ def embedding_near_dup_pairs(
 
     assign = assign_cells(vectors, centroids)
     v = vectors.join(assign, id_col).select(
-        F.col(id_col), "centroid_id", F.col("embedding").cast("array<double>").alias("emb")
+        F.col(id_col).alias("vec"), "centroid_id",
+        F.col("embedding").cast("array<double>").alias("emb"),
     )
-    a = v.select(F.col(id_col).alias("vec_a"), "centroid_id", F.col("emb").alias("emb_a"))
-    b = v.select(F.col(id_col).alias("vec_b"), "centroid_id", F.col("emb").alias("emb_b"))
-    pairs = (
-        a.join(b, "centroid_id").where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", F.round(cosine(F.col("emb_a"), F.col("emb_b")), 9).alias("cos"))
+    pairs = self_pairs(v, ["centroid_id"], "vec").select(
+        "vec_a", "vec_b", F.round(cosine(F.col("emb_a"), F.col("emb_b")), 9).alias("cos")
     )
     return pairs.where(F.col("cos") >= threshold)
 
@@ -689,8 +627,8 @@ def substring_duplicate_spans(
     - ``dropped_grams``: (h, n_docs) — grams shared by more than
       ``max_docs_per_gram`` documents (corpus-wide boilerplate: headers,
       license blurbs), EXCLUDED from pairing and returned instead of
-      silently exploding the self-join (same cap-and-report discipline as
-      the token/n-gram families).
+      silently exploding the self-join (``cap_groups``, as in the token and
+      n-gram families).
 
     Algorithm (every step engine-portable, so the DuckDB oracle reconstructs
     it bit-for-bit):
@@ -746,31 +684,16 @@ def substring_duplicate_spans(
         grams,
         lambda g: F.conv(F.substring(g["h"], 1, 4), 16, 10).cast("long") % mod_p == 0,
     )
-    ex = (
-        docs.select(F.col(id_col), F.explode(sel).alias("g"))
-        .select(id_col, F.col("g.pos").alias("pos"), F.col("g.h").alias("h"))
+    ex = docs.select(F.col(id_col).alias("doc"), F.explode(sel).alias("g")).select(
+        "doc", "g.pos", "g.h"
     )
     # one row per (doc, gram): min position (map-side-combinable)
-    g1 = ex.groupBy(id_col, "h").agg(F.min("pos").alias("pos"))
-    dfreq = g1.groupBy("h").agg(F.count("*").alias("n_docs"))
-    dropped = dfreq.where(F.col("n_docs") > max_docs_per_gram)
-    kept_h = dfreq.where(
-        (F.col("n_docs") >= 2) & (F.col("n_docs") <= max_docs_per_gram)
-    ).select("h")
-    cand = g1.join(kept_h, "h")
-    a = cand.select(
-        F.col("h"), F.col(id_col).alias("doc_a"), F.col("pos").alias("pos_a")
-    )
-    bb = cand.select(
-        F.col("h"), F.col(id_col).alias("doc_b"), F.col("pos").alias("pos_b")
-    )
-    pairs = (
-        a.join(bb, "h")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b", "pos_a", "pos_b",
-            (F.col("pos_b") - F.col("pos_a")).alias("diag"),
-        )
+    g1 = ex.groupBy("doc", "h").agg(F.min("pos").alias("pos"))
+    kept, dropped = cap_groups(g1, ["h"], max_docs_per_gram, n="n_docs")
+    # a gram in one doc pairs nothing
+    cand = kept.where(F.col("n_docs") >= 2).select("h", "doc", "pos")
+    pairs = self_pairs(cand, ["h"], "doc").select(
+        "doc_a", "doc_b", "pos_a", "pos_b", (F.col("pos_b") - F.col("pos_a")).alias("diag")
     )
     wdiag = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
     flagged = pairs.withColumn(

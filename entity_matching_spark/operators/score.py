@@ -36,6 +36,7 @@ from pyspark.sql.types import StructType, StructField, DoubleType
 from pyspark.sql.window import Window
 
 from ..config import DEFAULT_CONFIG, SEVERITY_PENALTY, MatchConfig
+from .blocking import DUPLICATE_KEY_PASSES
 
 # record columns carried into the pair join for each side
 SIDE_COLS = [
@@ -250,7 +251,7 @@ def duplicate_flags(records: DataFrame, pairs: DataFrame) -> DataFrame:
     b = rec.select(F.col("conv_id").alias("conv_id_b"), F.col("d9").alias("d9_b"))
     p = pairs.join(a, "conv_id_a").join(b, "conv_id_b")
 
-    key_dup = F.col("pass").isin("mei", "lei", "ein", "cleanname")
+    key_dup = F.col("pass").isin(*DUPLICATE_KEY_PASSES)
     name_sim = (
         (F.col("d9_a") != "")
         & (F.col("d9_b") != "")
@@ -298,8 +299,6 @@ def score_pairs(
         .withColumn("has_dup_b", F.coalesce("has_dup", F.lit(False)))
         .drop("has_dup")
     )
-
-    # I13 input (shortname_dup_b) now arrives pre-computed from _prepare_sides
 
     # --- similarity UDF (one Arrow pass per batch); tier predicates native --
     tiers = _tier_predicates()

@@ -33,7 +33,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, MatchConfig
 from ..operators.assemble import build_records
-from ..operators.blocking import cap_fuzzy_fanout, generate_blocking_keys, generate_pairs
+from ..operators.blocking import (
+    DUPLICATE_KEY_PASSES, cap_fuzzy_fanout, generate_blocking_keys, generate_pairs,
+)
 from ..operators.cluster import assign_clusters, connected_components
 from ..operators.score import match_edges, score_pairs
 from .checkpoint import StageCheckpointer
@@ -126,9 +128,9 @@ def run_pipeline(
             # cleaned-short-name equality, engine/DuplicateDetector.java:32-84)
             # into the clustering edge set, so exact duplicates cluster even
             # when their pairwise score lands below the MATCH threshold
-            dup_edges = pairs.where(
-                F.col("pass").isin("mei", "lei", "ein", "cleanname")
-            ).select("conv_id_a", "conv_id_b")
+            dup_edges = pairs.where(F.col("pass").isin(*DUPLICATE_KEY_PASSES)).select(
+                "conv_id_a", "conv_id_b"
+            )
             edges = edges.unionByName(dup_edges).distinct()
         return connected_components(edges, cfg)
 

@@ -6,9 +6,13 @@ import pytest
 
 from entity_matching_spark.config import MatchConfig
 from entity_matching_spark.operators.blocking import (
+    BLOCKING_PASSES,
+    DUPLICATE_KEY_PASSES,
+    cap_groups,
     generate_blocking_keys,
     generate_pairs,
     profile_block_keys,
+    self_pairs,
     sorted_neighborhood_keys,
 )
 
@@ -77,6 +81,10 @@ class TestPrecedence:
         assert shared_mei.where("pass != 'mei'").count() == 0
         assert shared_mei.count() > 0
 
+    def test_duplicate_key_passes_are_blocking_passes(self):
+        """The J1/J2 exact-key pass set names only passes blocking emits."""
+        assert set(DUPLICATE_KEY_PASSES) <= set(BLOCKING_PASSES)
+
 
 class TestScaleControls:
     def test_hot_key_capped(self, spark, records_df):
@@ -90,6 +98,35 @@ class TestScaleControls:
         assert {r["key"] for r in dropped.collect()} == hot
         # no pair row may originate from a dropped key
         assert pairs.where(F.col("block_key").isin(list(hot))).count() == 0
+
+    @pytest.mark.parametrize("cap", [2, None])
+    def test_cap_groups_and_self_pairs_contract(self, spark, cap):
+        """cap_groups keeps groups of <= cap rows with their size and reports
+        the rest as (*on, n); cap=None keeps everything. self_pairs emits each
+        in-group pair once, first_a < first_b, other columns as c_a / c_b."""
+        rows = spark.createDataFrame(
+            [("g", 1, "x", 10), ("g", 1, "y", 11), ("g", 1, "z", 12),
+             ("g", 2, "x", 13), ("g", 2, "y", 14), ("h", 1, "w", 15)],
+            "k1 string, k2 int, id string, v int",
+        )
+        kept, dropped = cap_groups(rows, ["k1", "k2"], cap, n="size")
+        assert dropped.columns == ["k1", "k2", "size"]
+        if cap is None:
+            assert dropped.count() == 0
+            assert kept.count() == 6
+        else:
+            assert [tuple(r) for r in dropped.collect()] == [("g", 1, 3)]
+            assert sorted((r["id"], r["size"]) for r in kept.collect()) == [
+                ("w", 1), ("x", 2), ("y", 2)
+            ]
+        pairs = self_pairs(kept.drop("size"), ["k1", "k2"], "id")
+        assert pairs.columns == ["k1", "k2", "id_a", "v_a", "id_b", "v_b"]
+        got = sorted(tuple(r) for r in pairs.collect())
+        expected = [("g", 2, "x", 13, "y", 14)]
+        if cap is None:
+            expected = [("g", 1, "x", 10, "y", 11), ("g", 1, "x", 10, "z", 12),
+                        ("g", 1, "y", 11, "z", 12)] + expected
+        assert got == expected
 
     @pytest.mark.parametrize("salt_threshold", [0, 2])
     def test_salted_join_equals_plain_join(self, spark, keys_df, salt_threshold):

@@ -3,8 +3,15 @@
 deterministic fixtures. The driver oracle (tools/check_oracles.py) covers
 cross-engine exactness; these pin the operator semantics directly."""
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
+
+
+def _doc_freq(texts, grams):
+    """Python document frequency: gram -> number of texts containing it."""
+    return Counter(g for t in texts for g in set(grams(t)))
 
 
 @pytest.fixture(scope="module")
@@ -55,6 +62,18 @@ class TestDedup:
         assert (1, 2) in got
         hot = {r["tok"] for r in dropped.collect()}
         assert {"alpha", "beta", "gamma", "delta"} <= hot
+        assert dropped.columns == ["source", "tok", "df"]
+        rows = docs.collect()
+        expected = sorted(
+            (src, tok, n)
+            for src in {r["source"] for r in rows}
+            for tok, n in _doc_freq(
+                [r["text"] for r in rows if r["source"] == src],
+                lambda t: [w for w in t.split(" ") if w],
+            ).items()
+            if n > 2
+        )
+        assert sorted(tuple(r) for r in dropped.collect()) == expected
 
     def test_ngram_jaccard_catches_token_boundary_edits(self, spark):
         from entity_matching_spark.operators.dedup import ngram_jaccard_pairs
@@ -72,6 +91,21 @@ class TestDedup:
         assert (1, 2) in got and got[(1, 2)] > 0.7
         assert all(3 not in p for p in got)
         assert dropped.count() == 0
+
+    def test_ngram_jaccard_df_cap_reports_dropped_grams(self, spark):
+        from entity_matching_spark.operators.dedup import ngram_jaccard_pairs
+
+        # cap=2: the 'the quick ' grams (in all three docs) leave candidate
+        # generation and are reported; 1-2 still pair via ' brown f...' grams
+        texts = ["the quick brown fox", "the quick brown fax", "the quick red hen"]
+        docs = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id int, text string")
+        pairs, dropped = ngram_jaccard_pairs(docs, n=5, threshold=0.5, df_cap=2)
+        assert {(r["doc_a"], r["doc_b"]) for r in pairs.collect()} == {(1, 2)}
+        assert dropped.columns == ["tok", "df"]
+        df = _doc_freq(texts, lambda t: [t[i:i + 5] for i in range(len(t) - 4)])
+        assert sorted(tuple(r) for r in dropped.collect()) == sorted(
+            (g, n) for g, n in df.items() if n > 2
+        )
 
     def test_ngram_jaccard_short_docs_no_partial_grams(self, spark):
         from entity_matching_spark.operators.dedup import ngram_jaccard_pairs
@@ -122,6 +156,7 @@ class TestDedup:
             vecs, n_planes=16, rows_per_band=4, threshold=0.5, dim=4, bucket_cap=2
         )
         assert pairs.count() == 0
+        assert dropped.columns == ["band", "bkey", "n_docs"]
         d = dropped.collect()
         assert len(d) == 4 and all(r["n_docs"] == 3 for r in d)
 
@@ -272,6 +307,7 @@ class TestSubstringDedup:
         spans, dropped = substring_duplicate_spans(
             docs, k=16, mod_p=2, max_docs_per_gram=4
         )
+        assert dropped.columns == ["h", "n_docs"]
         assert dropped.count() > 0
         assert all(r["n_docs"] > 4 for r in dropped.collect())
         assert spans.count() == 0  # every shared gram is above the cap
@@ -633,6 +669,7 @@ class TestDedupInvariants:
         )
         pairs, dropped = simhash_near_dup_pairs(df, max_hamming=3, bucket_cap=2)
         assert pairs.count() == 0
+        assert dropped.columns == ["band", "bkey", "n_docs"]
         d = dropped.collect()
         assert len(d) == SIMHASH_BANDS and all(r["n_docs"] == 3 for r in d)
         # cap above the bucket size: all three identical-doc pairs come back

@@ -39,6 +39,17 @@ def main():
     ap.add_argument("--only", nargs="*", default=None)
     args = ap.parse_args()
 
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    unknown = sorted(set(args.only or []) - set(qs))
+    if unknown:
+        print(f"unknown row name(s): {' '.join(unknown)}\nvalid: {' '.join(sorted(qs))}",
+              file=sys.stderr)
+        return 2
+    names = args.only or list(qs)
+
     import duckdb
     from pyspark.sql import SparkSession
 
@@ -61,11 +72,6 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')")
 
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    names = args.only or list(qs)
     failures = []
     for name in names:
         t0 = time.time()
