@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..operators.dedup import SIMHASH_BANDS, _BAND_BITS, _BAND_MASK, simhash60_py
-from .ingest import _gap_to_ms
+from .ingest import _gap_to_ms, _read_stream, _start, _write_batch
 
 DOC_DDL = "doc_id string, text string, ts timestamp"
 _VERDICT_DDL = (
@@ -142,11 +142,7 @@ def streaming_simhash_dedup(
             }
         )
 
-    stream = spark.readStream.schema(DOC_DDL)
-    if max_files_per_trigger:
-        stream = stream.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = stream.parquet(input_path).withWatermark("ts", watermark)
-
+    src = _read_stream(spark, DOC_DDL, input_path, watermark, max_files_per_trigger)
     bands = F.array(
         *[
             F.struct(
@@ -190,11 +186,6 @@ def streaming_simhash_dedup(
                 F.col("m.hamming").alias("hamming"),
             )
         )
-        per_doc.write.mode("overwrite").parquet(f"{output_path}/batch_id={batch_id}")
+        _write_batch(per_doc, output_path, batch_id)
 
-    writer = verdicts.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(verdicts.writeStream.foreachBatch(write_batch), checkpoint_path, available_now)

@@ -5,20 +5,10 @@ no streaming anywhere, SURVEY.md §2 'explicit absences'), and the north rule
 asks for *checkpoint-resumable batch*, which plans/pipeline.py provides. This
 module is the incremental complement for continuously-arriving transcripts:
 
-- `incremental_records`: readStream over the transcripts table/directory ->
-  foreachBatch -> per-batch S1 record assembly appended to the records table.
-  Conversations are only assembled once complete (watermark on `ts` bounds
-  how long we wait for late turns); each micro-batch processes only the
-  conversations whose last turn falls inside the batch window. Assumes each
-  arriving file carries whole conversations.
 - `stateful_assembly`: the CROSS-BATCH case — turns of one conversation may
-  arrive in different micro-batches. A custom stateful operator
-  (applyInPandasWithState, event-time timeout) accumulates each
-  conversation's turns in keyed state and emits the assembled document only
-  after no new turn has arrived for ``gap`` of event time (session-gap
-  semantics); late turns inside the watermark are merged in arrival-
-  independent (turn_idx, text)-sorted order, so the output text is identical
-  to the batch path's E1 concatenation.
+  arrive in different micro-batches. Keyed state (applyInPandasWithState)
+  emits each conversation once ``gap`` of event time passes with no new
+  turn (session-gap semantics), with the batch path's E1 text.
 
 - `incremental_match` + `compact_corpus`: continuous batch-vs-corpus
   matching, with an offline maintenance step that folds the accumulated
@@ -26,18 +16,26 @@ module is the incremental complement for continuously-arriving transcripts:
   micro-batch's corpus reads bucket-prune instead of scanning every
   historical partition.
 
+Every streaming query of the package (here, streaming/dedup.py and
+streaming/metrics.py) is built on one scaffold: `_read_stream` is its
+source, `_start` its checkpointed sink (availableNow catch-up by default),
+`_write_batch` the idempotent per-batch write of a foreachBatch sink, and
+`_batch_ids` lists the `<name>=<int>` children of a corpus table, a
+compacted table or a checkpoint log.
+
 At 10^12-turn scale the batch pipeline remains the primary path (bounded,
 resumable, rerunnable); streaming ingestion keeps the records table warm
-between batch recomputes. Uses trigger=availableNow for catch-up semantics,
-so the same code serves both backfill and tail-following.
+between batch recomputes.
 """
 
 from __future__ import annotations
 
 import logging
+from functools import reduce
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..config import DEFAULT_CONFIG, MatchConfig
@@ -50,49 +48,68 @@ TRANSCRIPT_DDL = (
 )
 
 
-def incremental_records(
+def _read_stream(
     spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    config: MatchConfig | None = None,
-    watermark: str = "10 minutes",
-    available_now: bool = True,
-):
-    """Stream transcript turn files -> append assembled records.
+    ddl: str,
+    path: str,
+    watermark: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The source of every streaming query here: the parquet files arriving
+    under ``path``, read with the fixed schema ``ddl`` (a streaming file
+    source does not infer one) and watermarked on their event time ``ts``.
+    ``max_files_per_trigger`` caps the files one micro-batch takes."""
+    reader = spark.readStream.schema(ddl)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path).withWatermark("ts", watermark)
 
-    Grouping a stream by conv_id requires complete-conversation semantics:
-    we watermark on `ts` and aggregate turns per conversation in update mode
-    inside foreachBatch (each arriving file carries whole conversations in
-    this pipeline's layout — the common case for conversation logs dumped by
-    upstream agents; cross-file conversations are reconciled by the batch
-    recompute path).
-    """
-    cfg = config or DEFAULT_CONFIG
-    from ..operators.assemble import build_records
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL).parquet(input_path)
-        .withWatermark("ts", watermark)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        records = build_records(batch_df, cfg)
-        # foreachBatch is at-least-once: a replayed micro-batch under plain
-        # mode('append') double-appends. Deterministic per-batch partition
-        # overwrite makes the replay a no-op rewrite (same discipline as
-        # incremental_match._write); readers see batch_id as a discovered
-        # partition column.
-        records.write.mode("overwrite").parquet(f"{output_path}/batch_id={batch_id}")
-
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
+def _start(
+    writer: DataStreamWriter, checkpoint_path: str, available_now: bool
+) -> StreamingQuery:
+    """The sink of every streaming query here: start ``writer`` with its
+    offsets, commits and state under ``checkpoint_path``, so a restart
+    resumes where the last run stopped. ``available_now`` processes the
+    files present at start and then stops (catch-up), so the same query
+    serves backfill and tail-following."""
+    writer = writer.option("checkpointLocation", checkpoint_path)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _write_batch(df: DataFrame, base: str, batch_id: int) -> None:
+    """Write one micro-batch's output to ``<base>/batch_id=<batch_id>``.
+
+    Idempotent under micro-batch REPLAY: foreachBatch offers at-least-once
+    execution, so a plain append would double-write a replayed batch.
+    Writing each batch to its own deterministic partition directory with
+    overwrite makes the replay a no-op rewrite; readers see ``batch_id`` as
+    a discovered partition column."""
+    df.write.mode("overwrite").parquet(f"{base}/batch_id={batch_id}")
+
+
+def _batch_ids(spark: SparkSession, path: str, prefix: str = "batch_id=") -> set[int]:
+    """The int ids of ``path``'s ``<prefix><int>`` children: the per-batch
+    partitions of a corpus table, the ``h=`` generations of a compacted one,
+    or, with ``prefix=""``, the batch entries of a streaming checkpoint's
+    ``offsets/`` or ``commits/`` log. Other children (metadata, ``.crc``
+    sidecars) are ignored, and a missing ``path`` has none. A table
+    directory emptied by a prune also has none: reading it would throw
+    instead of returning an empty frame."""
+    fs, hpath, _ = _fs(spark, path)
+    if not fs.exists(hpath):
+        return set()
+    ids: set[int] = set()
+    for st in fs.listStatus(hpath):
+        name = st.getPath().getName()
+        if name.startswith(prefix):
+            try:
+                ids.add(int(name[len(prefix):]))
+            except ValueError:
+                continue
+    return ids
 
 
 # output/state schemas for the stateful assembler
@@ -100,11 +117,21 @@ ASSEMBLED_DDL = "conv_id string, text string, n_turns int"
 _STATE_DDL = "turn_idx array<int>, text array<string>, max_ts_ms bigint"
 
 
+_UNIT_MS = {"second": 1000, "seconds": 1000, "minute": 60000, "minutes": 60000,
+            "hour": 3600000, "hours": 3600000}
+
+
 def _gap_to_ms(gap: str) -> int:
-    n, unit = gap.split()
-    mult = {"second": 1000, "seconds": 1000, "minute": 60000, "minutes": 60000,
-            "hour": 3600000, "hours": 3600000}[unit]
-    return int(n) * mult
+    """Milliseconds in an ``"<int> second(s)|minute(s)|hour(s)"`` duration
+    (a session ``gap`` or a dedup ``ttl``); any other form raises
+    ValueError before a query starts."""
+    parts = gap.split()
+    if len(parts) != 2 or not parts[0].isdecimal() or parts[1] not in _UNIT_MS:
+        raise ValueError(
+            f"duration {gap!r}: expected '<int> second(s)|minute(s)|hour(s)', "
+            f"e.g. '5 minutes'"
+        )
+    return int(parts[0]) * _UNIT_MS[parts[1]]
 
 
 def stateful_assembly(
@@ -157,13 +184,7 @@ def stateful_assembly(
         state.setTimeoutTimestamp(max(max_ts + gap_ms, state.getCurrentWatermarkMs() + 1))
         yield pd.DataFrame({"conv_id": [], "text": [], "n_turns": []})
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-    )
-    if max_files_per_trigger:
-        stream = stream.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = stream.parquet(input_path).withWatermark("ts", watermark)
-
+    src = _read_stream(spark, TRANSCRIPT_DDL, input_path, watermark, max_files_per_trigger)
     out = src.groupBy("conv_id").applyInPandasWithState(
         assemble,
         outputStructType=ASSEMBLED_DDL,
@@ -171,33 +192,14 @@ def stateful_assembly(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = out.writeStream.format("parquet").option("path", output_path).outputMode("append")
+    return _start(writer, checkpoint_path, available_now)
 
 
 # incremental_match corpus tables that get hash-bucketed on compaction:
 # table -> the column its per-batch reads probe on (keys join on `key`;
 # records are semi-joined by participant `conv_id`)
 _COMPACT_BUCKET_KEYS = {"keys": "key", "records": "conv_id"}
-
-
-def _has_batches(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` has at least one ``batch_id=*`` child — reading an
-    existing-but-emptied (post-prune) parquet dir would throw instead of
-    returning an empty frame."""
-    fs, hpath, _ = _fs(spark, path)
-    if not fs.exists(hpath):
-        return False
-    return any(
-        st.getPath().getName().startswith("batch_id=") for st in fs.listStatus(hpath)
-    )
 
 
 def _compaction_manifest(spark: SparkSession, comp_base: str) -> dict | None:
@@ -231,25 +233,12 @@ def _compaction_manifest(spark: SparkSession, comp_base: str) -> dict | None:
             # zero/partial/checksum-corrupt pointer: recover from the inner
             # copies (any unreadable pointer state resolves the same way)
             pointer_torn = True
-    fs, base, _ = _fs(spark, comp_base)
-    if not fs.exists(base):
-        if pointer_torn:
-            raise IOError(
-                f"compaction pointer {path} is unreadable and no h=* "
-                f"directory exists to recover from — refusing to treat the "
-                f"corpus as never-compacted (raw partitions may be pruned)"
-            )
-        return None
-    best: dict | None = None
-    for st in fs.listStatus(base):
-        name = st.getPath().getName()
-        if not name.startswith("h="):
-            continue
-        inner = f"{comp_base}/{name}/_COMPACTION.json"
+    for h in sorted(_batch_ids(spark, comp_base, prefix="h="), reverse=True):
+        inner = f"{comp_base}/h={h}/_COMPACTION.json"
         if not _fs_exists(spark, inner):
             continue
         try:
-            man = json.loads(_fs_read_text(spark, inner))
+            return json.loads(_fs_read_text(spark, inner))
         except Exception as e:
             # same breadth as the pointer read above: a checksum-corrupt or
             # torn copy (storage fault, or a pre-atomic release's writer)
@@ -260,10 +249,7 @@ def _compaction_manifest(spark: SparkSession, comp_base: str) -> dict | None:
             cause = (e.java_exception.getClass().getName()
                      if isinstance(e, Py4JJavaError) else type(e).__name__)
             log.warning("compaction recovery: skipping unreadable %s (%s)", inner, cause)
-            continue
-        if best is None or man["h"] > best["h"]:
-            best = man
-    if best is None and pointer_torn:
+    if pointer_torn:
         raise IOError(
             f"compaction pointer {path} is unreadable and no h=* directory "
             f"under {comp_base} carries a valid _COMPACTION.json copy — "
@@ -271,23 +257,7 @@ def _compaction_manifest(spark: SparkSession, comp_base: str) -> dict | None:
             f"attempted, so raw partitions may already be pruned); restore "
             f"the pointer or rebuild the compacted table before resuming"
         )
-    return best
-
-
-def _checkpoint_batch_ids(spark: SparkSession, log_dir: str) -> set[int]:
-    """Batch ids recorded in a structured-streaming checkpoint log dir
-    (offsets/ or commits/): integer-named files, metadata ignored."""
-    fs, hpath, _ = _fs(spark, log_dir)
-    if not fs.exists(hpath):
-        return set()
-    ids: set[int] = set()
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        try:
-            ids.add(int(name))
-        except ValueError:
-            continue
-    return ids
+    return None
 
 
 def _assert_stream_quiesced(
@@ -316,8 +286,8 @@ def _assert_stream_quiesced(
     Returns the committed-offsets snapshot for use as the next
     ``expected_offsets``."""
     ck = f"{work_dir}/_stream_checkpoint"
-    offs = _checkpoint_batch_ids(spark, f"{ck}/offsets")
-    inflight = offs - _checkpoint_batch_ids(spark, f"{ck}/commits")
+    offs = _batch_ids(spark, f"{ck}/offsets", prefix="")
+    inflight = offs - _batch_ids(spark, f"{ck}/commits", prefix="")
     if inflight:
         raise RuntimeError(
             f"compact_corpus: in-flight/uncommitted micro-batch(es) "
@@ -356,79 +326,76 @@ def compact_corpus(
     always follow the manifest, so a compaction that dies mid-write is
     invisible. Re-compaction folds the previous compacted data plus the raw
     batches newer than its high-water mark, so it works whether or not the
-    raw partitions were pruned.
+    raw partitions were pruned. That input is exactly a full corpus read,
+    so it goes through ``_read_corpus_table``; the new high-water mark is
+    the highest ``batch_id=`` directory listed above the old one (a batch
+    whose partition holds zero rows is absorbed like any other, unless the
+    whole fold is empty, which commits nothing), and each table's ``rows``
+    is observed on the frame the compaction writes.
 
     MUST run while the ingest stream is STOPPED (after a clean availableNow
     completion): the high-water mark assumes every raw ``batch_id`` it
-    absorbs is committed. ENFORCED, not just documented, with a two-point
-    check (see ``_assert_stream_quiesced``): at entry, an in-flight batch
-    (offset written, commit missing) raises before any data moves; and
-    immediately before EACH table's manifest commit the offsets snapshot is
-    re-compared — a stream that was merely idle-between-batches at entry
-    and ran a batch during the rewrite aborts before that table's pointer
-    moves. The abort is per-table, not per-run: tables whose pointers were
-    already cut over earlier in the loop STAY committed (each passed its own
-    recheck, so each committed pointer is individually consistent), and a
-    re-run after stopping the stream compacts the remaining tables up to
-    their own high-water marks. The replay side is guarded in ``incremental_match``'s
-    process_batch, which refuses a ``batch_id <= h`` (a batch already
-    absorbed by compaction — reprocessing it would cross-pair the batch
-    against its own compacted copy). ``prune_raw=True`` additionally deletes
-    the absorbed raw batch partitions and the superseded compacted
-    directory.
+    absorbs is committed. ENFORCED, not just documented, by
+    ``_assert_stream_quiesced`` at entry (before any data moves) and again
+    immediately before EACH table's manifest commit; its docstring gives
+    the two-point check and the per-table abort. The replay side is guarded
+    in ``incremental_match``'s process_batch, which refuses a
+    ``batch_id <= h`` (a batch already absorbed by compaction — reprocessing
+    it would cross-pair the batch against its own compacted copy).
+    ``prune_raw=True`` additionally deletes the absorbed raw batch
+    partitions and the superseded compacted directory.
 
-    Returns per-table stats ({table: {"h": ..., "rows": ...}}).
+    Returns per-table stats ({table: {"h": ..., "rows": ...}}). Raises
+    ValueError, before any check or read, when ``n_buckets < 1``.
     """
     import json
 
+    if n_buckets < 1:
+        raise ValueError(f"compact_corpus: n_buckets must be >= 1, got {n_buckets}")
     offs0 = _assert_stream_quiesced(spark, work_dir)
 
     stats: dict = {}
-    plans: list[tuple[str, str, int, object]] = []
+    plans: list[tuple[str, str, int, dict | None]] = []
     for table in ("keys", "records", "key_counts"):
         raw = f"{work_dir}/{table}"
         comp_base = f"{work_dir}/{table}_compacted"
         prev = _compaction_manifest(spark, comp_base)
-        parts = []
-        new_high = prev["h"] if prev else None
-        if _has_batches(spark, raw):
-            raw_df = spark.read.parquet(raw)
-            if prev:
-                raw_df = raw_df.where(F.col("batch_id") > prev["h"])
-            mx = raw_df.agg(F.max("batch_id")).first()[0]
-            if mx is not None:
-                new_high = mx if new_high is None else max(new_high, mx)
-                parts.append(raw_df.drop("batch_id"))
-        if prev and (new_high is None or new_high == prev["h"]):
+        h_prev = prev["h"] if prev else -1
+        new_high = max((b for b in _batch_ids(spark, raw) if b > h_prev), default=None)
+        if new_high is None:
             # nothing newer than the last compaction: rewriting h=<prev>
             # would overwrite the directory the plan lazily READS from
             continue
-        if prev:
-            comp_prev = spark.read.parquet(f"{comp_base}/h={prev['h']}")
-            parts.append(comp_prev.drop("bucket") if "bucket" in comp_prev.columns else comp_prev)
-        if not parts or new_high is None:
-            continue
-        data = parts[0]
-        for p in parts[1:]:
-            data = data.unionByName(p)
+        # the previous compacted data plus every raw batch above its mark
+        data = _read_corpus_table(spark, work_dir, table, -1)
         out_dir = f"{comp_base}/h={new_high}"
         if table == "key_counts":
             # pre-sum: one row per key, no buckets (skinny — read whole)
-            summed = data.groupBy("clean_name_key").agg(F.sum("n").alias("n"))
-            summed.write.mode("overwrite").parquet(out_dir)
-            manifest = {"h": int(new_high)}
+            out = data.groupBy("clean_name_key").agg(F.sum("n").alias("n"))
+            partition_by = []
+            manifest = {"h": new_high}
         else:
             key_col = _COMPACT_BUCKET_KEYS[table]
-            (
-                data.withColumn(
-                    "bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-                )
-                .repartition("bucket")
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(out_dir)
-            )
-            manifest = {"h": int(new_high), "n_buckets": n_buckets, "key": key_col}
+            out = data.withColumn(
+                "bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+            ).repartition("bucket")
+            partition_by = ["bucket"]
+            manifest = {"h": new_high, "n_buckets": n_buckets, "key": key_col}
+        # the row count rides the write (no re-read, no extra job)
+        obs = Observation()
+        (
+            out.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .write.partitionBy(*partition_by)
+            .mode("overwrite")
+            .parquet(out_dir)
+        )
+        rows = obs.get["rows"]
+        if rows == 0:
+            # only empty batches to fold, and a bucketed write of no rows
+            # leaves no file to read a schema back from: commit nothing
+            fs, hpath, _ = _fs(spark, out_dir)
+            fs.delete(hpath, True)
+            continue
         # commit order: (0) re-verify the stream stayed quiesced across the
         # rewrite (an idle-at-entry stream may have run a batch since);
         # (1) inner copy inside the completed directory — the recovery
@@ -436,27 +403,17 @@ def compact_corpus(
         _assert_stream_quiesced(spark, work_dir, expected_offsets=offs0)
         _fs_write_text_atomic(spark, f"{out_dir}/_COMPACTION.json", json.dumps(manifest))
         _fs_write_text_atomic(spark, f"{comp_base}/MANIFEST.json", json.dumps(manifest))
-        stats[table] = {"h": int(new_high),
-                        "rows": spark.read.parquet(out_dir).count()}
-        plans.append((raw, comp_base, int(new_high), prev))
+        stats[table] = {"h": new_high, "rows": rows}
+        plans.append((raw, comp_base, new_high, prev))
 
     if prune_raw:
         for raw, comp_base, h, prev in plans:
-            fs, raw_path, jvm = _fs(spark, raw)
-            if fs.exists(raw_path):
-                for st in fs.listStatus(raw_path):
-                    name = st.getPath().getName()
-                    if name.startswith("batch_id="):
-                        try:
-                            b = int(name.split("=", 1)[1])
-                        except ValueError:
-                            continue
-                        if b <= h:
-                            fs.delete(st.getPath(), True)
-            if prev and prev["h"] != h:
-                pfs, ppath, _ = _fs(spark, f"{comp_base}/h={prev['h']}")
-                if pfs.exists(ppath):
-                    pfs.delete(ppath, True)
+            doomed = [f"{raw}/batch_id={b}" for b in _batch_ids(spark, raw) if b <= h]
+            if prev:
+                doomed.append(f"{comp_base}/h={prev['h']}")  # superseded
+            for path in doomed:
+                fs, hpath, _ = _fs(spark, path)
+                fs.delete(hpath, True)
     return stats
 
 
@@ -488,33 +445,27 @@ def _read_corpus_table(
     raw = f"{work_dir}/{table}"
     comp_base = f"{work_dir}/{table}_compacted"
     man = _compaction_manifest(spark, comp_base)
-    raw_exists = _has_batches(spark, raw)
-    if man is None:
-        if not raw_exists:
-            return None
-        return (
+    parts = []
+    if man is not None:
+        comp = read(f"{comp_base}/h={man['h']}", "bucket" if "n_buckets" in man else None)
+        if prune_by is not None and "n_buckets" in man:
+            buckets = [
+                r[0]
+                for r in prune_by.select(
+                    F.pmod(F.xxhash64(F.col(man["key"])), F.lit(man["n_buckets"])).alias("b")
+                ).distinct().collect()
+            ]
+            comp = comp.where(F.col("bucket").isin(buckets))
+        parts.append(comp.drop("bucket"))  # a no-op on the unbucketed key_counts
+    if _batch_ids(spark, raw):
+        # every raw batch before any compaction, and those above its mark after
+        high = man["h"] if man else -1
+        parts.append(
             read(raw, "batch_id")
-            .where(F.col("batch_id") != exclude_batch)
+            .where((F.col("batch_id") > high) & (F.col("batch_id") != exclude_batch))
             .drop("batch_id")
         )
-    comp = read(f"{comp_base}/h={man['h']}", "bucket" if "n_buckets" in man else None)
-    if prune_by is not None and "n_buckets" in man:
-        buckets = [
-            r[0]
-            for r in prune_by.select(
-                F.pmod(F.xxhash64(F.col(man["key"])), F.lit(man["n_buckets"])).alias("b")
-            ).distinct().collect()
-        ]
-        comp = comp.where(F.col("bucket").isin(buckets))
-    comp = comp.drop("bucket")  # a no-op on the unbucketed key_counts
-    if raw_exists:
-        recent = (
-            read(raw, "batch_id")
-            .where((F.col("batch_id") > man["h"]) & (F.col("batch_id") != exclude_batch))
-            .drop("batch_id")
-        )
-        comp = comp.unionByName(recent)
-    return comp
+    return reduce(DataFrame.unionByName, parts) if parts else None
 
 
 def incremental_match(
@@ -529,10 +480,8 @@ def incremental_match(
     """Continuous matching: every micro-batch of transcript turns is
     assembled into records and matched against the ACCUMULATED corpus.
 
-    Per batch (foreachBatch; effectively-once: the streaming checkpoint
-    gives at-least-once batch execution and every write lands in a
-    deterministic per-batch partition with overwrite, so replays rewrite
-    instead of duplicating):
+    Per batch (foreachBatch; effectively-once: every write goes through
+    ``_write_batch``, so a replayed batch rewrites instead of duplicating):
 
     1. assemble + extract the batch's conversations (build_records);
     2. blocking keys for the batch records — the corpus's keys are READ from
@@ -580,15 +529,6 @@ def incremental_match(
     keys_path = f"{work_dir}/keys"
     matches_path = f"{work_dir}/matches"
     key_counts_path = f"{work_dir}/key_counts"
-
-    def _write(df: DataFrame, base: str, batch_id: int):
-        # Idempotent under micro-batch REPLAY: foreachBatch offers
-        # at-least-once execution, so a plain append would double-write a
-        # replayed batch. Writing each batch to its own deterministic
-        # partition directory with overwrite makes the replay a no-op
-        # rewrite; readers see batch_id as a discovered partition column
-        # (dropped by the SIDE_COLS/SCORED_COLS projections).
-        df.write.mode("overwrite").parquet(f"{base}/batch_id={batch_id}")
 
     # Replay-vs-compaction guard, read ONCE before the stream starts (not
     # per micro-batch — compact_corpus may only run while the stream is
@@ -680,19 +620,14 @@ def incremental_match(
         )
 
         scored = score_pairs(sides, pairs, cfg)
-        _write(scored.select(*SCORED_COLS), matches_path, batch_id)
+        _write_batch(scored.select(*SCORED_COLS), matches_path, batch_id)
 
-        _write(batch_records, records_path, batch_id)
-        _write(batch_keys, keys_path, batch_id)
-        _write(batch_counts, key_counts_path, batch_id)
+        _write_batch(batch_records, records_path, batch_id)
+        _write_batch(batch_keys, keys_path, batch_id)
+        _write_batch(batch_counts, key_counts_path, batch_id)
 
-    stream = spark.readStream.schema(TRANSCRIPT_DDL)
-    if max_files_per_trigger:
-        stream = stream.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = stream.parquet(input_path).withWatermark("ts", watermark)
-    writer = src.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", f"{work_dir}/_stream_checkpoint"
+    src = _read_stream(spark, TRANSCRIPT_DDL, input_path, watermark, max_files_per_trigger)
+    return _start(
+        src.writeStream.foreachBatch(process_batch), f"{work_dir}/_stream_checkpoint",
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -2,9 +2,10 @@
 
 Completes the Structured Streaming surface next to foreachBatch ingestion
 (streaming/ingest.py) and the custom stateful operators (stateful_assembly,
-streaming/dedup.py): the classic `readStream -> withWatermark -> groupBy(
-window(...)) -> writeStream(append)` shape, where APPEND output mode makes
-the late-data contract explicit —
+streaming/dedup.py): the classic watermarked source -> `groupBy(window(...))`
+-> append-mode file sink shape, built on the package's one streaming
+scaffold (source `ingest._read_stream`, checkpointed sink `ingest._start`),
+where APPEND output mode makes the late-data contract explicit —
 
 - a window row is emitted exactly once, only after the event-time watermark
   passes the window end (the window is FINAL — downstream consumers never
@@ -31,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
-from .ingest import TRANSCRIPT_DDL
+from .ingest import TRANSCRIPT_DDL, _read_stream, _start
 
 
 def windowed_turn_metrics(
@@ -53,11 +54,7 @@ def windowed_turn_metrics(
     intentionally NOT emitted — append mode trades tail latency for final,
     never-revised rows.
     """
-    reader = spark.readStream.schema(TRANSCRIPT_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path).withWatermark("ts", watermark)
-
+    stream = _read_stream(spark, TRANSCRIPT_DDL, input_path, watermark, max_files_per_trigger)
     agg = (
         stream.groupBy(F.window("ts", window, slide or window), "role")
         .agg(
@@ -73,12 +70,5 @@ def windowed_turn_metrics(
             "role", "n_turns", "n_convs_approx", "total_chars",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = agg.writeStream.format("parquet").option("path", output_path).outputMode("append")
+    return _start(writer, checkpoint_path, available_now)

@@ -1,38 +1,47 @@
-"""Structured Streaming ingest: incremental records via foreachBatch with
-availableNow catch-up (entity_matching_spark/streaming/ingest.py)."""
+"""Structured Streaming queries (entity_matching_spark/streaming/): stateful
+assembly, incremental batch-vs-corpus matching and its compaction, online
+dedup and windowed metrics."""
 
 import os
 
 import pytest
 
 
-class TestIncrementalIngest:
-    def test_available_now_catchup(self, spark, transcripts_df, tmp_path):
-        from entity_matching_spark.streaming.ingest import incremental_records
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn()`` under Spark job group ``group``; returns its result and
+    the ids of the jobs it ran."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
-        in_dir = str(tmp_path / "in")
-        out_dir = str(tmp_path / "out")
-        ck_dir = str(tmp_path / "ck")
-        transcripts_df.limit(0).write.parquet(out_dir)  # schema-less seed dir ok
-        import shutil
 
-        shutil.rmtree(out_dir)
+def _corpus_frames(spark):
+    """One micro-batch's rows of each incremental_match corpus table."""
+    return {
+        "records": spark.createDataFrame(
+            [("c1", "acme"), ("c2", "acme")], "conv_id string, norm_legal_name string"),
+        "keys": spark.createDataFrame(
+            [("c1", "mei", "mei:X1"), ("c2", "lei", "lei:Y2")],
+            "conv_id string, pass string, key string"),
+        "key_counts": spark.createDataFrame(
+            [("acme", 2)], "clean_name_key string, n bigint"),
+    }
 
-        sample = transcripts_df.where("conv_id < 'conv00000010'")
-        sample.write.parquet(in_dir)
 
-        q = incremental_records(spark, in_dir, out_dir, ck_dir)
-        q.awaitTermination(120)
-
-        got = spark.read.parquet(out_dir)
-        n_conv = sample.select("conv_id").distinct().count()
-        assert got.count() == n_conv
-        assert "norm_legal_name" in got.columns
-
-        # second availableNow run with no new files appends nothing
-        q2 = incremental_records(spark, in_dir, out_dir, ck_dir)
-        q2.awaitTermination(120)
-        assert spark.read.parquet(out_dir).count() == n_conv
+def _raw_corpus(spark, wd, tables=("records", "keys", "key_counts")):
+    """A two-batch incremental_match work dir by hand: the same rows in
+    ``batch_id=0`` and ``batch_id=1`` of each table, no stream checkpoint.
+    Returns the per-table frames."""
+    frames = _corpus_frames(spark)
+    for table in tables:
+        for b in (0, 1):
+            frames[table].write.parquet(f"{wd}/{table}/batch_id={b}")
+    return frames
 
 
 class TestStatefulAssembly:
@@ -139,8 +148,10 @@ class TestIncrementalMatch:
         assert got[("convA1", "convA2")] == "IDENTIFIER"   # intra-batch
         assert got[("convA1", "convB")] == "IDENTIFIER"    # cross-batch
         assert got[("convA2", "convB")] == "IDENTIFIER"
-        # corpus accumulated all three records + their keys
-        assert spark.read.parquet(wd + "/records").count() == 3
+        # corpus accumulated all three assembled records + their keys
+        records = spark.read.parquet(wd + "/records")
+        assert records.count() == 3
+        assert "norm_legal_name" in records.columns
         assert spark.read.parquet(wd + "/keys").select("conv_id").distinct().count() == 3
 
         # restart with no new input: no duplicate appends (per-batch
@@ -241,6 +252,33 @@ class TestStreamingDedup:
         assert batch_sigs == {
             "a": simhash60_py(base), "b": simhash60_py(near), "c": simhash60_py(other)
         }
+
+
+class TestDurationValidation:
+    @pytest.mark.parametrize(
+        "duration", ["5 min", "5minutes", "-5 minutes", "5.5 minutes", "5 minutes ago"]
+    )
+    @pytest.mark.parametrize(
+        "module,query,param",
+        [("ingest", "stateful_assembly", "gap"), ("dedup", "streaming_simhash_dedup", "ttl")],
+    )
+    def test_malformed_duration_raises_before_any_query(
+        self, spark, tmp_path, module, query, param, duration
+    ):
+        """A ``gap``/``ttl`` outside ``"<int> second(s)|minute(s)|hour(s)"``
+        raises a ValueError naming the accepted forms before any query starts
+        (no checkpoint is written)."""
+        import importlib
+
+        mod = importlib.import_module(f"entity_matching_spark.streaming.{module}")
+        start = getattr(mod, query)
+        active = {q.id for q in spark.streams.active}
+        ck = tmp_path / "ck"
+        with pytest.raises(ValueError, match=r"second\(s\)\|minute\(s\)\|hour\(s\)"):
+            start(spark, str(tmp_path / "in"), str(tmp_path / "out"), str(ck),
+                  **{param: duration})
+        assert not ck.exists()
+        assert {q.id for q in spark.streams.active} == active
 
 
 class TestWindowedMetrics:
@@ -491,6 +529,11 @@ class TestCorpusCompaction:
 
         stats = compact_corpus(spark, wd, n_buckets=8, prune_raw=True)
         assert stats["keys"]["h"] == 1 and stats["records"]["h"] == 1
+        # each table's rows are those of the table it wrote; key_counts is
+        # pre-summed to one row per key (its raw deltas hold two rows)
+        for table in ("keys", "records", "key_counts"):
+            assert stats[table]["rows"] == _read_corpus_table(spark, wd, table, -1).count()
+        assert stats["key_counts"]["rows"] == 1
         # raw batch partitions absorbed and pruned
         assert not globmod.glob(wd + "/keys/batch_id=*")
         assert not globmod.glob(wd + "/records/batch_id=*")
@@ -596,28 +639,15 @@ class TestCorpusCompaction:
         no Spark job, and return the rows and schema of an inferring read."""
         from entity_matching_spark.streaming.ingest import _read_corpus_table, compact_corpus
 
-        sc = spark.sparkContext
         wd = str(tmp_path / "swork")
-        frames = {
-            "keys": spark.createDataFrame(
-                [("c1", "mei", "mei:X1"), ("c2", "lei", "lei:Y2")],
-                "conv_id string, pass string, key string"),
-            "key_counts": spark.createDataFrame(
-                [("acme", 2)], "clean_name_key string, n bigint"),
-        }
-        for table, df in frames.items():
-            for b in (0, 1):
-                df.write.parquet(f"{wd}/{table}/batch_id={b}")
+        frames = _raw_corpus(spark, wd, tables=("keys", "key_counts"))
 
         def check(table):
-            group = f"corpus-read-{table}"
-            prev = sc.getLocalProperty("spark.jobGroup.id")
-            sc.setJobGroup(group, "corpus read")
-            try:
-                pinned = _read_corpus_table(spark, wd, table, 1, schema=frames[table].schema)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", prev)
-            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], table
+            pinned, jobs = _jobs_in_group(
+                spark, f"corpus-read-{table}",
+                lambda: _read_corpus_table(spark, wd, table, 1, schema=frames[table].schema),
+            )
+            assert jobs == [], table
             inferred = _read_corpus_table(spark, wd, table, 1)
             assert pinned.schema == inferred.schema, (pinned.schema, inferred.schema)
             assert sorted(pinned.collect()) == sorted(inferred.collect())
@@ -626,6 +656,74 @@ class TestCorpusCompaction:
         assert check("keys") == 2 and check("key_counts") == 1  # raw: batch 0 only
         compact_corpus(spark, wd, n_buckets=4)
         assert check("keys") == 4 and check("key_counts") == 1  # compacted: both
+
+    def test_first_compaction_job_ceiling(self, spark, tmp_path):
+        """The first compaction of a two-batch work dir takes its high-water
+        mark from the batch directory listing and each table's rows from an
+        observation on the frame it writes, so per table it runs only the
+        raw read's schema inference and the write: at most 12 jobs for the
+        three tables."""
+        from entity_matching_spark.streaming.ingest import compact_corpus
+
+        wd = str(tmp_path / "jwork")
+        _raw_corpus(spark, wd)
+        stats, jobs = _jobs_in_group(
+            spark, "first-compaction", lambda: compact_corpus(spark, wd, n_buckets=4)
+        )
+        assert stats == {"records": {"h": 1, "rows": 4}, "keys": {"h": 1, "rows": 4},
+                         "key_counts": {"h": 1, "rows": 1}}
+        assert len(jobs) <= 12, jobs
+
+    def test_empty_batches_fold_into_the_next_compaction(self, spark, tmp_path):
+        """A batch partition with zero rows is absorbed like any other; a
+        table whose whole fold is empty commits nothing (a bucketed write
+        of no rows leaves no file to read a schema back from) and keeps its
+        raw partitions for the next compaction."""
+        import glob
+
+        from entity_matching_spark.streaming.ingest import _read_corpus_table, compact_corpus
+
+        wd = str(tmp_path / "ework")
+        keys = _corpus_frames(spark)["keys"]
+        keys.limit(0).write.parquet(f"{wd}/keys/batch_id=0")
+        assert compact_corpus(spark, wd, n_buckets=4, prune_raw=True) == {}
+        assert glob.glob(wd + "/keys/batch_id=0")
+        assert not glob.glob(wd + "/keys_compacted/*")
+
+        keys.write.parquet(f"{wd}/keys/batch_id=1")
+        keys.limit(0).write.parquet(f"{wd}/keys/batch_id=2")
+        stats = compact_corpus(spark, wd, n_buckets=4, prune_raw=True)
+        assert stats == {"keys": {"h": 2, "rows": 2}}
+        assert not glob.glob(wd + "/keys/batch_id=*")  # all three absorbed
+        assert _read_corpus_table(spark, wd, "keys", -1).count() == 2
+
+    @pytest.mark.parametrize("via", ["compact_corpus", "cli"])
+    @pytest.mark.parametrize("n_buckets", [0, -1])
+    def test_bucket_count_below_one_raises_before_any_check(
+        self, spark, tmp_path, n_buckets, via
+    ):
+        """``n_buckets < 1`` raises ValueError before the quiesce check (an
+        in-flight batch here would raise RuntimeError) and before any read or
+        write: no compacted directory appears."""
+        import glob
+        import sys
+
+        from entity_matching_spark.streaming.ingest import compact_corpus
+
+        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+        import jobs.compact_corpus as cli
+
+        wd = str(tmp_path / "bwork")
+        _raw_corpus(spark, wd)
+        os.makedirs(wd + "/_stream_checkpoint/offsets")
+        with open(wd + "/_stream_checkpoint/offsets/2", "w") as f:
+            f.write("v1\n{}")
+        with pytest.raises(ValueError, match="n_buckets"):
+            if via == "cli":
+                cli.main(["--work-dir", wd, "--buckets", str(n_buckets)])
+            else:
+                compact_corpus(spark, wd, n_buckets=n_buckets)
+        assert not glob.glob(wd + "/*_compacted")
 
 
 class TestCompactCorpusCLI:
